@@ -792,3 +792,92 @@ def test_rule_impact_sole_violations(spark):
         "b:required": (2, 0, 0),
         "c:min": (2, 0, 0),
     }
+
+
+# --- py4j round trips / plan-memoized columns ---------------------------------------
+
+def _hit_round_trips(df, rs, monkeypatch) -> int:
+    """py4j round trips this thread makes in validate() + violations()
+    on a plan-cache hit whose plan has already built its memoized
+    columns. py4j's finalizer thread sends the deletes of collected
+    JavaObjects whenever it runs; those are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    validate(df, rs, key_cols=["k"]).violations()  # compile + memoize
+    me = threading.current_thread()
+    n = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        n[0] += threading.current_thread() is me
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        validate(df, rs, key_cols=["k"]).violations()
+    return n[0]
+
+
+def test_cache_hit_round_trips_independent_of_rule_count(spark, monkeypatch):
+    df = spark.createDataFrame(
+        [(1, "ab", "cd", "", "x", "yz")],
+        "k long, a string, b string, c string, d string, e string",
+    )
+    five = RuleSet(rules={"a": "required|minLen:1", "b": "required|maxLen:9", "c": "required"})
+    per_col = "required|minLen:1|maxLen:9|isAlpha"
+    twenty = RuleSet(rules={c: per_col for c in "abcde"})
+    assert len(validate(df, five).plan.rules) == 5
+    assert len(validate(df, twenty).plan.rules) == 20
+    n5 = _hit_round_trips(df, five, monkeypatch)
+    n20 = _hit_round_trips(df, twenty, monkeypatch)
+    assert n5 == n20
+    # call-site capture off and nothing rebuilt: a few dozen, not the
+    # ~800 a 5-rule request made with both
+    assert n5 < 200
+
+
+def test_memoized_plan_serves_other_frames(spark):
+    """One plan whose columns were memoized on a first frame gives a
+    second frame of the same schema its own answers — with and without
+    stop-on-error, one after the other on the same plan."""
+    from validate_spark.plans.plan import compile_plan
+
+    schema = "k long, name string, n long"
+    df1 = spark.createDataFrame([(1, "", 5), (2, "bob", -3)], schema)
+    df2 = spark.createDataFrame(
+        [(7, "al", None), (8, "", -1), (9, "carol", 40)], schema
+    )
+    rules = {"name": "required|minLen:3", "n": "required|min:0|max:30"}
+    shared = compile_plan(RuleSet(rules=rules), df1.schema)
+    report = {
+        (f, v): (1, 2)
+        for f, v in [("name", "required"), ("name", "minLength"),
+                     ("n", "required"), ("n", "min"), ("n", "max")]
+    }
+    every = {(7, "name", "minLength", 1), (7, "n", "required", 2),
+             (8, "name", "required", 0), (8, "n", "min", 3), (9, "n", "max", 4)}
+    first = {(7, "name", "minLength", 1), (8, "name", "required", 0),
+             (9, "n", "max", 4)}
+    for stop, viol, n_viol in ((False, every, (2, 2, 1)), (True, first, (1, 1, 1))):
+        rs = RuleSet(rules=rules, stop_on_error=stop)
+        warm = validate(df1, rs, key_cols=["k"], plan=shared)
+        warm.violations(), warm.verdicts(), warm.rule_report()  # memoize
+        res = validate(df2, rs, key_cols=["k"], plan=shared)
+        got = {
+            (r["k"], r["field"], r["validator"], r["rule_idx"])
+            for r in res.violations().collect()
+        }
+        assert got == viol
+        assert sorted(tuple(r) for r in res.verdicts().collect()) == [
+            (k, False, n) for k, n in zip((7, 8, 9), n_viol)
+        ]
+        assert {
+            (r["field"], r["validator"]): (r["n_fail"], r["n_pass"])
+            for r in res.rule_report().collect()
+        } == report
+
+
+def test_get_spark_turns_off_call_site_capture(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

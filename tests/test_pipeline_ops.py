@@ -113,6 +113,39 @@ def test_dedup_clusters_long_chain(spark):
     assert got == {(f"n{i}", "n0") for i in range(6)}
 
 
+def test_dedup_clusters_max_iter_bounds_rounds_after_init(spark):
+    """Initialization runs propagation round 1, so max_iter=k returns
+    the labels of round k+1: on a chain, each node's minimum within
+    k+1 hops."""
+    edges = [(f"n{i}", f"n{i+1}") for i in range(5)]
+    pairs = spark.createDataFrame(edges, "a string, b string")
+
+    def labels(max_iter):
+        return {
+            r["member"]: r["cluster"]
+            for r in dd.dedup_clusters(pairs, max_iter=max_iter).collect()
+        }
+
+    assert labels(0) == {f"n{i}": f"n{max(i - 1, 0)}" for i in range(6)}
+    assert labels(1) == {f"n{i}": f"n{max(i - 2, 0)}" for i in range(6)}
+    with pytest.raises(ValueError, match="max_iter"):
+        dd.dedup_clusters(pairs, max_iter=-1)
+
+
+def test_embedding_pair_cos_row_bound(spark, monkeypatch):
+    """Over PAIR_COS_MAX_ROWS rows the scorer refuses before scoring
+    and names the scale path; at the bound it scores."""
+    df = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    monkeypatch.setattr(dd, "PAIR_COS_MAX_ROWS", 3)
+    with pytest.raises(ValueError, match="embedding_neardup_lsh"):
+        dd.embedding_pair_cos(df, threshold=0.0, dim=2)
+    monkeypatch.setattr(dd, "PAIR_COS_MAX_ROWS", 4)
+    assert dd.embedding_pair_cos(df, threshold=0.0, dim=2).count() == 6
+
+
 def test_simhash_neardup(spark):
     base = " ".join(f"tok{i}" for i in range(60))
     near = base.replace("tok7 ", "tok7x ")

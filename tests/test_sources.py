@@ -533,3 +533,81 @@ def test_variant_fields_typed_probes(spark):
     assert rows[2]["json_valid"] is False      # malformed -> flagged
     assert rows[2]["ab"] is None
     assert rows[3]["json_valid"] and rows[3]["ab"] is None  # missing path
+
+
+def _read_table_jobs(spark, path, *, expect_jobs: bool):
+    """read_table(path) and whether the read itself ran a Spark job
+    (the parquet schema-inference job). Job registration reaches the
+    status tracker asynchronously, so a read expected to run one
+    waits for it."""
+    import time
+    import uuid
+
+    from validate_spark.sources.tables import read_table
+
+    sc = spark.sparkContext
+    group = f"read_table_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_table")
+    try:
+        df = read_table(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + (10 if expect_jobs else 0)
+    while True:
+        ran = bool(sc.statusTracker().getJobIdsForGroup(group))
+        if ran or time.monotonic() >= deadline:
+            return df, ran
+        time.sleep(0.05)
+
+
+def test_read_table_memoizes_parquet_schema(spark, tmp_path):
+    """The second read of an unchanged parquet path skips the
+    inference job and returns the same frame; an overwrite with a
+    different schema and an added file are both picked up; a
+    partitioned directory keeps its partition column."""
+    from validate_spark.sources.tables import read_table
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a")], "id long, s string").write.parquet(path)
+    first, ran = _read_table_jobs(spark, path, expect_jobs=True)
+    assert ran
+    again, ran = _read_table_jobs(spark, path, expect_jobs=False)
+    assert not ran
+    assert again.schema == first.schema and again.collect() == first.collect()
+
+    spark.createDataFrame([(2.5, True)], "x double, flag boolean").write.mode(
+        "overwrite"
+    ).parquet(path)
+    over = read_table(spark, path)
+    assert over.columns == ["x", "flag"]
+    assert [tuple(r) for r in over.collect()] == [(2.5, True)]
+
+    # under mergeSchema an added file's new column shows only if the
+    # schema is inferred again
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert read_table(spark, path).columns == ["x", "flag"]
+        spark.createDataFrame(
+            [(3.0, False, "new")], "x double, flag boolean, extra string"
+        ).write.mode("append").parquet(path)
+        added = read_table(spark, path)
+        assert added.columns == ["x", "flag", "extra"]
+        assert sorted(tuple(r) for r in added.collect()) == [
+            (2.5, True, None), (3.0, False, "new")
+        ]
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+    routed = str(tmp_path / "routed")
+    spark.createDataFrame(
+        [(1, True), (2, False)], "id long, verdict boolean"
+    ).write.partitionBy("verdict").parquet(routed)
+    inferred = read_table(spark, routed)
+    memoized, ran = _read_table_jobs(spark, routed, expect_jobs=False)
+    assert not ran
+    assert memoized.schema == inferred.schema
+    assert memoized.columns == ["id", "verdict"]
+    # partition inference types true/false as strings, both times
+    assert sorted(tuple(r) for r in memoized.collect()) == [(1, "true"), (2, "false")]
+    # a URI with a scheme keeps the plain read
+    assert read_table(spark, "file://" + routed).count() == 2

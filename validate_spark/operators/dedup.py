@@ -830,7 +830,16 @@ def dedup_clusters(
     checkpoints truncate lineage, so they are unrecoverable by design).
     Either way the superseded round's storage is released explicitly
     each iteration, not left to driver GC.
+
+    ``max_iter`` bounds the rounds AFTER initialization, which already
+    runs propagation round 1: at most ``max_iter + 1`` rounds run.
+    ``max_iter=0`` returns the round-1 labels, each node's minimum
+    over itself and its direct neighbours — the final clusters only
+    where every member pairs directly with its component's minimum
+    key. A negative ``max_iter`` is a ``ValueError``.
     """
+    if max_iter < 0:
+        raise ValueError(f"max_iter must be >= 0, got {max_iter}")
     if reliable:
         ckpt = lambda d: d.checkpoint()  # noqa: E731
         free = lambda d: None  # noqa: E731 — files cleaned by
@@ -1050,6 +1059,11 @@ def cosine_sim(a: Column, b: Column, dim: int | None = None) -> Column:
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
+# row bound of embedding_pair_cos's local collect: 10^5 rows are
+# already 5·10^9 exhaustive pairs
+PAIR_COS_MAX_ROWS = 100_000
+
+
 def embedding_pair_cos(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1087,16 +1101,29 @@ def embedding_pair_cos(
     Contract: ``dim`` is the caller's guarantee that every vector is
     exactly that length with finite, non-null elements (both report
     queries pre-filter exactly this); the kernel is undefined on
-    unvalidated frames — use the fold path / LSH for those."""
+    unvalidated frames — use the fold path / LSH for those. An input
+    of more than ``PAIR_COS_MAX_ROWS`` rows is a ``ValueError`` that
+    points to ``embedding_neardup_lsh``; the collect stops one row
+    past the bound."""
     import numpy as np
 
     spark = df.sparkSession
     kt = df.schema[key_col].dataType.simpleString()
     out_schema = f"a {kt}, b {kt}, cos double"
-    pdf = df.select(
-        F.col(key_col).alias("k"), F.col(vec_col).alias("v")
-    ).toPandas()
+    # bounded collect: at most one row past the bound reaches Python
+    pdf = (
+        df.select(F.col(key_col).alias("k"), F.col(vec_col).alias("v"))
+        .limit(PAIR_COS_MAX_ROWS + 1)
+        .toPandas()
+    )
     n = len(pdf)
+    if n > PAIR_COS_MAX_ROWS:
+        raise ValueError(
+            f"embedding_pair_cos collects its input into local memory and "
+            f"scores all n² pairs; the input has more than "
+            f"{PAIR_COS_MAX_ROWS} rows. Use embedding_neardup_lsh for "
+            f"inputs of this size."
+        )
     if n < 2:
         return spark.createDataFrame([], out_schema)
     keys = pdf["k"].to_numpy()

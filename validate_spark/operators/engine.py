@@ -84,34 +84,23 @@ class ValidationResult:
         concat-of-conditionals failed array (one giant generated
         method JIT-bails to ~12× slower).] The stop-on-error /
         zero-rule paths keep the sliced-FAILED explode — their
-        volumes are 1-bounded per row."""
+        volumes are 1-bounded per row. The explode, filter and output
+        columns are memoized on the plan; only the key columns are
+        per call."""
+        keys = self.key_cols
         if self.stop_on_error or not self.plan.rules:
-            v = self.annotated.select(
-                *self.key_cols,
-                F.explode(F.col(FAILED_COL)).alias("_viol"),
+            explode, outputs = self.plan.memo(
+                "violations_failed", _failed_violation_columns
             )
-            return v.select(
-                *self.key_cols,
-                F.col("_viol.field").alias("field"),
-                F.col("_viol.validator").alias("validator"),
-                F.col("_viol.message").alias("message"),
-                F.col("_viol.idx").alias("rule_idx"),
-            )
-        n_rules = len(self.plan.rules)
-        g = self.annotated.select(
-            *self.key_cols,
-            F.col(RESULTS_COL),
-            F.explode(F.sequence(F.lit(0), F.lit(n_rules - 1))).alias("_i"),
+            return self.annotated.select(*keys, explode).select(*keys, *outputs)
+        generate, keep, outputs = self.plan.memo(
+            "violations_indexed",
+            lambda: _indexed_violation_columns(len(self.plan.rules)),
         )
-        e = F.get(F.col(RESULTS_COL), F.col("_i"))
-        return g.filter(
-            ~F.coalesce(e.getField("ok"), F.lit(True))
-        ).select(
-            *self.key_cols,
-            e.getField("field").alias("field"),
-            e.getField("validator").alias("validator"),
-            e.getField("message").alias("message"),
-            e.getField("idx").alias("rule_idx"),
+        return (
+            self.annotated.select(*keys, *generate)
+            .filter(keep)
+            .select(*keys, *outputs)
         )
 
     def first_errors(self) -> DataFrame:
@@ -279,38 +268,17 @@ class ValidationResult:
         one aggregate over the results array — each partition emits
         len(rules) longs (map-side partial), vs ``summary()`` which
         shuffles one exploded row per violation. The right shape for a
-        10^12-row health dashboard; includes rules with zero failures."""
-        aggs = [
-            F.coalesce(
-                F.sum((~F.col(RESULTS_COL)[i].getField("ok")).cast("long")),
-                F.lit(0),  # empty input: sum is NULL, report 0
-            ).alias(f"_r{i}")
-            for i in range(len(self.plan.rules))
-        ]
-        row = self.annotated.agg(F.count(F.lit(1)).alias("_n"), *aggs)
-        # no generated SQL here: interpolating field names into a
-        # selectExpr stack() breaks on names containing quotes (legal in
-        # rule keys and form-derived struct paths) — build the long form
-        # as an exploded array of literal structs instead
-        structs = F.array(
-            *[
-                F.struct(
-                    F.lit(r.field).alias("field"),
-                    F.lit(r.validator).alias("validator"),
-                    F.col(f"_r{i}").alias("n_fail"),
-                )
-                for i, r in enumerate(self.plan.rules)
-            ]
+        10^12-row health dashboard; includes rules with zero failures.
+        Its columns are memoized on the plan."""
+        aggs, explode, n_pass = self.plan.memo(
+            "rule_report", lambda: _rule_report_columns(self.plan.rules)
         )
-        stacked = row.select("_n", F.explode(structs).alias("_e")).select(
-            "_n", "_e.field", "_e.validator", "_e.n_fail"
+        stacked = (
+            self.annotated.agg(*aggs)
+            .select("_n", explode)
+            .select("_n", "_e.field", "_e.validator", "_e.n_fail")
         )
-        return stacked.select(
-            "field",
-            "validator",
-            "n_fail",
-            (F.col("_n") - F.col("n_fail")).alias("n_pass"),
-        )
+        return stacked.select("field", "validator", "n_fail", n_pass)
 
     def violations_sample(self, fraction: float, *, seed: int = 0) -> DataFrame:
         """Deterministic, shuffle-free sample of violation rows.
@@ -329,6 +297,75 @@ class ValidationResult:
             F.xxhash64(*[F.col(c) for c in self.key_cols], F.lit(seed)), F.lit(m)
         ) < int(fraction * m)
         return self.violations().filter(gate)
+
+
+def _failed_violation_columns() -> tuple:
+    """violations() of the sliced-FAILED path: (explode, outputs)."""
+    return (
+        F.explode(F.col(FAILED_COL)).alias("_viol"),
+        (
+            F.col("_viol.field").alias("field"),
+            F.col("_viol.validator").alias("validator"),
+            F.col("_viol.message").alias("message"),
+            F.col("_viol.idx").alias("rule_idx"),
+        ),
+    )
+
+
+def _indexed_violation_columns(n_rules: int) -> tuple:
+    """violations() of the literal-index path: (generate, keep,
+    outputs)."""
+    generate = (
+        F.col(RESULTS_COL),
+        F.explode(F.sequence(F.lit(0), F.lit(n_rules - 1))).alias("_i"),
+    )
+    e = F.get(F.col(RESULTS_COL), F.col("_i"))
+    outputs = (
+        e.getField("field").alias("field"),
+        e.getField("validator").alias("validator"),
+        e.getField("message").alias("message"),
+        e.getField("idx").alias("rule_idx"),
+    )
+    return generate, ~F.coalesce(e.getField("ok"), F.lit(True)), outputs
+
+
+def _rule_report_columns(rules) -> tuple:
+    """rule_report(): (aggregates, explode of the long form, n_pass)."""
+    aggs = [F.count(F.lit(1)).alias("_n")] + [
+        F.coalesce(
+            F.sum((~F.col(RESULTS_COL)[i].getField("ok")).cast("long")),
+            F.lit(0),  # empty input: sum is NULL, report 0
+        ).alias(f"_r{i}")
+        for i in range(len(rules))
+    ]
+    # no generated SQL here: interpolating field names into a
+    # selectExpr stack() breaks on names containing quotes (legal in
+    # rule keys and form-derived struct paths) — build the long form
+    # as an exploded array of literal structs instead
+    structs = F.array(
+        *[
+            F.struct(
+                F.lit(r.field).alias("field"),
+                F.lit(r.validator).alias("validator"),
+                F.col(f"_r{i}").alias("n_fail"),
+            )
+            for i, r in enumerate(rules)
+        ]
+    )
+    return (
+        aggs,
+        F.explode(structs).alias("_e"),
+        (F.col("_n") - F.col("n_fail")).alias("n_pass"),
+    )
+
+
+def _failed_and_pass(stop_on_error: bool) -> tuple:
+    """validate()'s FAILED and PASS columns; FAILED is sliced to the
+    first failure under stop-on-error."""
+    failed = F.filter(F.col(RESULTS_COL), lambda r: ~r.getField("ok"))
+    if stop_on_error:
+        failed = F.slice(failed, 1, 1)
+    return failed, F.size(F.col(FAILED_COL)) == 0
 
 
 def write_routed(
@@ -456,14 +493,17 @@ def validate(
     if plan.filter_projections:
         out = out.withColumns(plan.filter_projections)
 
-    results = plan.results_array()
-    out = out.withColumn(RESULTS_COL, results)
-    out = out.withColumn(
-        FAILED_COL, F.filter(F.col(RESULTS_COL), lambda r: ~r.getField("ok"))
+    # each column reads the one before it, so three projections; their
+    # Columns are memoized on the plan
+    failed, passed = plan.memo(
+        ("failed_pass", ruleset.stop_on_error),
+        lambda: _failed_and_pass(ruleset.stop_on_error),
     )
-    if ruleset.stop_on_error:
-        out = out.withColumn(FAILED_COL, F.slice(F.col(FAILED_COL), 1, 1))
-    out = out.withColumn(PASS_COL, F.size(F.col(FAILED_COL)) == 0)
+    out = (
+        out.withColumn(RESULTS_COL, plan.results_array())
+        .withColumn(FAILED_COL, failed)
+        .withColumn(PASS_COL, passed)
+    )
 
     return ValidationResult(
         annotated=out,

@@ -290,12 +290,34 @@ class Plan:
     default_projections: dict[str, Column]
     ruleset: RuleSet
     plan_hash: str
+    # Columns that depend on the plan alone, built once per plan (see
+    # ``memo``)
+    _memo: dict = dc_field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
+
+    def memo(self, key, build):
+        """The Column (or tuple of Columns) ``build()`` returns, built
+        once per plan and ``key``. Every Column call is a py4j round
+        trip, so a plan-cache hit that rebuilt its results array and
+        violation columns paid O(|rules|) round trips per request;
+        memoized, a repeat request builds nothing. Column expressions
+        are unresolved and immutable, so one instance serves every
+        same-schema frame. Two threads that miss together both build
+        an equal value and one wins; no lock is needed."""
+        value = self._memo.get(key)
+        if value is None:
+            value = self._memo[key] = build()
+        return value
 
     def results_array(self) -> Column:
         """Ordered array<struct<idx,field,validator,message,ok>> — rule
         order IS array order, giving deterministic StopOnError/"first
         failing rule" semantics that independent columns can't
-        (SURVEY.md §4 item 5)."""
+        (SURVEY.md §4 item 5). Memoized on the plan."""
+        return self.memo("results", self._build_results_array)
+
+    def _build_results_array(self) -> Column:
         if not self.rules:
             return F.array().cast(_RESULTS_TYPE)
 

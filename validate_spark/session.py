@@ -79,7 +79,20 @@ def get_spark(
     RocksDB spills state to local disk with incremental checkpointing.
     Output semantics are identical (asserted by
     tests/test_streaming.py::test_stateful_sessionize_rocksdb_provider);
-    it is also a per-query conf, settable before ``.start()``."""
+    it is also a per-query conf, settable before ``.start()``.
+
+    DataFrame call-site capture is OFF
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark 4
+    wraps every ``F.*``, Column and DataFrame call in a capture that
+    costs about ten extra JVM round trips (active-session lookup, a
+    conf read, origin set/clear): ``F.col`` alone makes 13, and a
+    cached-plan validation request made ~800 round trips, almost all
+    of them this capture. The cost is that a runtime error's
+    ``DataFrameQueryContext`` loses its Python call site, which points
+    into validate_spark internals rather than user code anyway. PySpark
+    reads the setting once per process, from the first session that
+    makes a wrapped call; ``extra_conf`` can still set it back to
+    ``"true"`` for debugging."""
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
@@ -97,6 +110,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
