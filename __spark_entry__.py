@@ -100,15 +100,16 @@ def _write_chunks(chunks: dict[str, list[DataFrame]]) -> None:
 
     ``maxFileAge`` (7 days, relative to the newest listed file) can
     never age a chunk out: all slots sit within seconds of each other,
-    anchored an hour before wall clock — or one second past the newest
-    file already in any target directory, whichever is later, so a
-    second call on the same directory orders its chunks after the
+    anchored an hour before wall clock. Write each directory's chunks
+    in ONE call: the slots restart at that anchor on every call, so a
+    second call on a directory would not order its chunks after the
     first call's. No chunks (an empty dict or empty lists) writes
     nothing."""
     import shutil
     import time as _time
     from concurrent.futures import ThreadPoolExecutor
 
+    base = int(_time.time()) - 3600
     tasks = []
     for src, frames in chunks.items():
         os.makedirs(src, exist_ok=True)
@@ -116,15 +117,6 @@ def _write_chunks(chunks: dict[str, list[DataFrame]]) -> None:
             tasks.append((src, i, frame))
     if not tasks:
         return
-    newest = max(
-        (
-            os.stat(os.path.join(src, f)).st_mtime
-            for src in chunks
-            for f in os.listdir(src)
-        ),
-        default=0,
-    )
-    base = max(int(_time.time()) - 3600, int(newest) + 1)
 
     def _one(task):
         src, i, frame = task

@@ -2,6 +2,8 @@
 bracket-key normalization #324, util.go:200-221) and locale message
 maps (locales/zhcn/zhcn.go)."""
 
+import os
+
 from pyspark.sql import Row
 
 from validate_spark.plans.messages import LOCALES, register_locale, render_message
@@ -563,8 +565,7 @@ def _read_table_jobs(spark, path, *, expect_jobs: bool):
 def test_read_table_memoizes_parquet_schema(spark, tmp_path):
     """The second read of an unchanged parquet path skips the
     inference job and returns the same frame; an overwrite with a
-    different schema and an added file are both picked up; a
-    partitioned directory keeps its partition column."""
+    different schema and an added file are both picked up."""
     from validate_spark.sources.tables import read_table
 
     path = str(tmp_path / "t")
@@ -598,6 +599,13 @@ def test_read_table_memoizes_parquet_schema(spark, tmp_path):
     finally:
         spark.conf.unset("spark.sql.parquet.mergeSchema")
 
+
+def test_read_table_memo_partitions_and_symlinks(spark, tmp_path):
+    """A memoized read of a partitioned directory keeps its partition
+    column; a URI with a scheme and a tree with a symlinked partition
+    keep the plain read."""
+    from validate_spark.sources.tables import read_table
+
     routed = str(tmp_path / "routed")
     spark.createDataFrame(
         [(1, True), (2, False)], "id long, verdict boolean"
@@ -611,3 +619,18 @@ def test_read_table_memoizes_parquet_schema(spark, tmp_path):
     assert sorted(tuple(r) for r in memoized.collect()) == [(1, "true"), (2, "false")]
     # a URI with a scheme keeps the plain read
     assert read_table(spark, "file://" + routed).count() == 2
+
+    # Spark reads the files under a symlinked partition, so an
+    # overwrite behind the link must show
+    target = str(tmp_path / "elsewhere")
+    spark.createDataFrame([(1,)], "id long").write.parquet(target)
+    linked = tmp_path / "linked"
+    linked.mkdir()
+    os.symlink(target, str(linked / "p=1"))
+    assert read_table(spark, str(linked)).columns == ["id", "p"]
+    spark.createDataFrame([(2, "x")], "id long, extra string").write.mode(
+        "overwrite"
+    ).parquet(target)
+    relinked = read_table(spark, str(linked))
+    assert relinked.columns == ["id", "extra", "p"]
+    assert [tuple(r) for r in relinked.collect()] == [(2, "x", 1)]

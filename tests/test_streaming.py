@@ -600,21 +600,12 @@ def test_write_chunks_parallel_order_and_content(spark, tmp_path):
     assert not [d for d in os.listdir(tmp_path) if "__stage" in d]
 
 
-def test_write_chunks_empty_and_second_call(spark, tmp_path):
+def test_write_chunks_empty(tmp_path):
     """No chunks writes nothing (an empty dict once built a
-    zero-worker pool and raised); a second call on the same directory
-    stamps its chunks after the first call's."""
+    zero-worker pool and raised)."""
     import __spark_entry__ as em
 
     em._write_chunks({})
     src = str(tmp_path / "chunks")
     em._write_chunks({src: []})
     assert os.listdir(src) == []
-    em._write_chunks({src: [spark.range(0, 2).select(F.col("id").alias("v"))]})
-    em._write_chunks({src: [spark.range(2, 4).select(F.col("id").alias("v"))]})
-    parts = [f for f in os.listdir(src) if not f.startswith(("_", "."))]
-    by_mtime = sorted(parts, key=lambda f: os.path.getmtime(os.path.join(src, f)))
-    assert [
-        sorted(r["v"] for r in spark.read.parquet(os.path.join(src, f)).collect())
-        for f in by_mtime
-    ] == [[0, 1], [2, 3]]

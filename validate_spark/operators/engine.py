@@ -268,17 +268,38 @@ class ValidationResult:
         one aggregate over the results array — each partition emits
         len(rules) longs (map-side partial), vs ``summary()`` which
         shuffles one exploded row per violation. The right shape for a
-        10^12-row health dashboard; includes rules with zero failures.
-        Its columns are memoized on the plan."""
-        aggs, explode, n_pass = self.plan.memo(
-            "rule_report", lambda: _rule_report_columns(self.plan.rules)
+        10^12-row health dashboard; includes rules with zero failures."""
+        aggs = [
+            F.coalesce(
+                F.sum((~F.col(RESULTS_COL)[i].getField("ok")).cast("long")),
+                F.lit(0),  # empty input: sum is NULL, report 0
+            ).alias(f"_r{i}")
+            for i in range(len(self.plan.rules))
+        ]
+        row = self.annotated.agg(F.count(F.lit(1)).alias("_n"), *aggs)
+        # no generated SQL here: interpolating field names into a
+        # selectExpr stack() breaks on names containing quotes (legal in
+        # rule keys and form-derived struct paths) — build the long form
+        # as an exploded array of literal structs instead
+        structs = F.array(
+            *[
+                F.struct(
+                    F.lit(r.field).alias("field"),
+                    F.lit(r.validator).alias("validator"),
+                    F.col(f"_r{i}").alias("n_fail"),
+                )
+                for i, r in enumerate(self.plan.rules)
+            ]
         )
-        stacked = (
-            self.annotated.agg(*aggs)
-            .select("_n", explode)
-            .select("_n", "_e.field", "_e.validator", "_e.n_fail")
+        stacked = row.select("_n", F.explode(structs).alias("_e")).select(
+            "_n", "_e.field", "_e.validator", "_e.n_fail"
         )
-        return stacked.select("field", "validator", "n_fail", n_pass)
+        return stacked.select(
+            "field",
+            "validator",
+            "n_fail",
+            (F.col("_n") - F.col("n_fail")).alias("n_pass"),
+        )
 
     def violations_sample(self, fraction: float, *, seed: int = 0) -> DataFrame:
         """Deterministic, shuffle-free sample of violation rows.
@@ -327,36 +348,6 @@ def _indexed_violation_columns(n_rules: int) -> tuple:
         e.getField("idx").alias("rule_idx"),
     )
     return generate, ~F.coalesce(e.getField("ok"), F.lit(True)), outputs
-
-
-def _rule_report_columns(rules) -> tuple:
-    """rule_report(): (aggregates, explode of the long form, n_pass)."""
-    aggs = [F.count(F.lit(1)).alias("_n")] + [
-        F.coalesce(
-            F.sum((~F.col(RESULTS_COL)[i].getField("ok")).cast("long")),
-            F.lit(0),  # empty input: sum is NULL, report 0
-        ).alias(f"_r{i}")
-        for i in range(len(rules))
-    ]
-    # no generated SQL here: interpolating field names into a
-    # selectExpr stack() breaks on names containing quotes (legal in
-    # rule keys and form-derived struct paths) — build the long form
-    # as an exploded array of literal structs instead
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(r.field).alias("field"),
-                F.lit(r.validator).alias("validator"),
-                F.col(f"_r{i}").alias("n_fail"),
-            )
-            for i, r in enumerate(rules)
-        ]
-    )
-    return (
-        aggs,
-        F.explode(structs).alias("_e"),
-        (F.col("_n") - F.col("n_fail")).alias("n_pass"),
-    )
 
 
 def _failed_and_pass(stop_on_error: bool) -> tuple:

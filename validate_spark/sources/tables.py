@@ -89,8 +89,11 @@ def read_table(
 def _fingerprint(path: str) -> tuple | None:
     """(path, size, mtime_ns) of every file under a local ``path``,
     sorted, or None when this process cannot stat it (a URI with a
-    scheme, a glob, a missing path). Hidden and ``_``-prefixed files
-    count too: a key that is too sensitive only costs an inference."""
+    scheme, a glob, a missing path) or when the tree holds a symlinked
+    directory: Spark's listing descends into one, so its files would
+    have to be in the key, and a cyclic link would loop the walk.
+    Hidden and ``_``-prefixed files count too: a key that is too
+    sensitive only costs an inference."""
     if urlparse(path).scheme:
         return None
     try:
@@ -100,7 +103,9 @@ def _fingerprint(path: str) -> tuple | None:
     if not os.path.isdir(path):
         return ((path, st.st_size, st.st_mtime_ns),)
     files = []
-    for base, _, names in os.walk(path):
+    for base, dirs, names in os.walk(path):
+        if any(os.path.islink(os.path.join(base, d)) for d in dirs):
+            return None
         for name in names:
             f = os.path.join(base, name)
             try:
@@ -122,10 +127,16 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     hit reads with ``spark.read.schema(memoized)``, which returns the
     same columns, types and order (partition columns last) without
     the job. An overwrite, an added or removed file, or a changed
-    setting misses and infers again. The key costs one ``os.stat``
-    per file in this process, which Spark's own listing pays as well. A
-    writer that replaces files between the key and the scan can race
-    this read the same way it races any Spark read."""
+    setting misses and infers again.
+
+    Only a repeat read of an unchanged path gains. Every read pays the
+    key: a walk with one ``os.stat`` per file in this process and five
+    conf reads. Measured on a 4-vCPU VM (median of 20 interleaved
+    pairs), a first read cost +4 ms on one file, +12 ms on a
+    ``write_routed``-shaped directory of 400 files and +21 ms on 40
+    partitions of 1000 files; a repeat read of the same three saved
+    70-90 ms. A writer that replaces files between the key and the
+    scan can race this read the same way it races any Spark read."""
     files = _fingerprint(path)
     if files is None:
         return spark.read.parquet(path)
