@@ -53,24 +53,19 @@ def _rows_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     """Materialized result rows (memory-sink collects) as a JVM/Arrow-
     backed frame. ``createDataFrame(rows)`` builds a 32-slice Python
     RDD that re-pays a Python-runner scan per consuming action (the
-    `_lit_df` mechanism); for scalar-only schemas the rows convert
-    once through pandas/Arrow instead. Timestamp handling is identical
-    to the RDD path (both interpret naive datetimes in the driver
-    session zone), and complex schemas keep the original path."""
-    from pyspark.sql import types as T
+    `_lit_df` mechanism); the rows convert once through pandas/Arrow
+    instead. Timestamp handling is identical to the RDD path (both
+    interpret naive datetimes in the driver session zone); every
+    caller's schema is scalar-only, and empty ``rows`` give the same
+    empty frame as ``createDataFrame([], schema)``."""
+    import pandas as pd
 
-    if rows and all(
-        isinstance(f.dataType, T.AtomicType) for f in schema.fields
-    ):
-        import pandas as pd
-
-        pdf = pd.DataFrame(
-            [tuple(r) for r in rows],
-            columns=[f.name for f in schema.fields],
-            dtype=object,
-        )
-        return spark.createDataFrame(pdf, schema=schema)
-    return spark.createDataFrame(rows, schema)
+    pdf = pd.DataFrame(
+        [tuple(r) for r in rows],
+        columns=[f.name for f in schema.fields],
+        dtype=object,
+    )
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 def _write_chunks(chunks: dict[str, list[DataFrame]]) -> None:

@@ -150,6 +150,76 @@ def test_kmeans_fit_deterministic_and_improves_recall(spark):
     assert r_kmeans > 0
 
 
+def _chain_bucket(scores):
+    """Reference argmax: the left-to-right when/otherwise chain that
+    carries the best score forward (``score > best`` takes)."""
+    best_b, best_s = F.lit(0), F.lit(-2.0)
+    for ci, s in enumerate(scores):
+        take = s > best_s
+        best_b = F.when(take, F.lit(ci)).otherwise(best_b)
+        best_s = F.when(take, s).otherwise(best_s)
+    return best_b.cast("int")
+
+
+def test_assign_ivf_buckets_matches_chain_argmax(spark):
+    """The array_max argmax picks the bucket the chain picks on ties
+    (±0.0 included), NaN scores, NULL vectors/elements and NULL scores
+    from a longer centroid; its plan grows linearly in centroids."""
+    import math
+
+    from validate_spark.operators import similarity as sim
+    from validate_spark.operators.dedup import cosine_sim
+
+    nan = float("nan")
+    rows = [
+        (1, [1e50, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0]), (4, [-1.0, 0.0]),
+        (5, [0.0, 0.0]), (6, None), (7, [1.0, None]), (8, [1.0, 1.0]),
+        (9, [1.0, 0.0, 0.0]), (10, [nan, 1.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    neg0, pos0 = [-1e-310, 1e50], [1e-310, 1e50]
+    # (centroids, {vec_id: bucket} the chain must also give)
+    cases = [
+        ([neg0, pos0, [-1.0, 0.0], [-1.0, 0.0]], {1: 0, 4: 2}),  # -0.0 vs +0.0 tie; tie
+        ([[1.0, 0.0], [1.0, 0.0], [0.0, 1.0], [0.0, 1.0]], {3: 2, 8: 0}),
+        ([[1.0, 0.0], [nan, 0.0], [1.0, 0.0], [nan, 1.0]], {2: 1, 10: 0}),  # NaN first
+        ([[1.0, 0.0, 0.0], [0.0, 1.0], [0.0, 1.0]], {3: 1, 9: 0, 6: 0, 7: 0}),  # NULL
+        ([], {2: 0}),
+    ]
+    out = df.select(
+        "vec_id",
+        "embedding",
+        *[
+            cosine_sim(F.col("embedding"), F.array(*map(F.lit, c))).alias(f"s{i}_{j}")
+            for i, (cents, _) in enumerate(cases)
+            for j, c in enumerate(cents)
+        ],
+    )
+    for i, (cents, _) in enumerate(cases):
+        out = sim.assign_ivf_buckets(out, cents).withColumnRenamed("bucket", f"b{i}")
+    out = out.select(
+        "*",
+        *[
+            _chain_bucket([F.col(f"s{i}_{j}") for j in range(len(cents))]).alias(f"ref{i}")
+            for i, (cents, _) in enumerate(cases)
+        ],
+    )
+    got = {r["vec_id"]: r for r in out.collect()}
+    # row 1 scores exactly -0.0 against neg0 and +0.0 against pos0
+    assert got[1]["s0_0"] == 0.0 and math.copysign(1.0, got[1]["s0_0"]) < 0
+    assert got[1]["s0_1"] == 0.0 and math.copysign(1.0, got[1]["s0_1"]) > 0
+    for i, (cents, expect) in enumerate(cases):
+        assert all(r[f"b{i}"] == r[f"ref{i}"] for r in got.values()), cents
+        assert {v: got[v][f"b{i}"] for v in expect} == expect, cents
+
+    def plan_chars(n):
+        cents = [[float(i), 1.0] for i in range(n)]
+        out = sim.assign_ivf_buckets(df, cents)
+        return len(out._jdf.queryExecution().analyzed().toString())
+
+    assert plan_chars(8) <= 2.5 * plan_chars(4)
+
+
 def test_suggest_rules_snapshot_passes(spark):
     from validate_spark.operators.suggest import suggest_rules
 

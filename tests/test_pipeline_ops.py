@@ -1879,30 +1879,3 @@ def test_cross_source_dup_matrix(spark):
         ("a", "c"): (1, 1, 1),
         ("b", "c"): (1, 1, 1),
     }
-
-
-def test_cosine_sim_unrolled_bit_identical(spark):
-    """The dim-unrolled cosine must be BIT-identical to the fold form
-    (same left-to-right IEEE addition order) — the q219 PQ-unroll
-    contract extended to the cosine kernel. Checked with ==, not
-    approx."""
-    import pyspark.sql.functions as F
-
-    from validate_spark.operators.dedup import cosine_sim
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
-    pairs = a.join(b, F.col("a") % 7 == F.col("b") % 5)
-    out = (
-        pairs.select(
-            (
-                cosine_sim(F.col("va"), F.col("vb"))
-                == cosine_sim(F.col("va"), F.col("vb"), 64)
-            ).alias("eq")
-        )
-        .groupBy("eq")
-        .count()
-        .collect()
-    )
-    assert len(out) == 1 and out[0]["eq"] is True and out[0]["count"] > 0

@@ -184,72 +184,6 @@ def drop_exact_duplicates(
 # 2. MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of the normalized text. Short texts
-    (< k chars) contribute their whole text as the single shingle so
-    they can still match exactly.
-
-    PERF: pass a plain column reference, not a computed expression —
-    the substr lambda re-evaluates its child PER ELEMENT under
-    interpreted eval, so an inline ``normalize_text(...)`` here costs
-    one regexp_replace per shingle. ``shingle_frame`` stages the
-    normalization in its own projection first; prefer it."""
-    t = text
-    n = F.length(t)
-    shingled = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-            lambda i: t.substr(i, F.lit(k)),
-        )
-    )
-    return F.when(n == 0, F.array().cast("array<string>")).otherwise(shingled)
-
-
-def shingle_frame(
-    df: DataFrame, text_col: str = "text", key_col: str = "doc_id", *, k: int = 5
-) -> DataFrame:
-    """(k: string-key, sh: array<string>) — normalized in one projection,
-    shingled in the next, so the regexp normalization runs once per row
-    (measured ~10× on 400-shingle docs; see char_shingles PERF note).
-    CollapseProject keeps the boundary: the normalized alias is
-    non-cheap and multiply-referenced."""
-    normed = df.select(
-        F.col(key_col).cast("string").alias("k"),
-        normalize_text(F.col(text_col)).alias("_t"),
-    )
-    # drop empty docs HERE, on the scalar column: a later
-    # filter(size(sh) > 0) would be predicate-pushed below this
-    # projection, substituting the full shingle expression into the
-    # lambda and re-evaluating the normalization per element
-    # (measured 5s → 35s on 1k docs)
-    normed = normed.filter(F.length("_t") > 0)
-    return normed.select("k", shingle_set_udf(k)(F.col("_t")).alias("sh"))
-
-
-def _hash_family(i: int):
-    """One-arg lambda factory. NOTE: ``lambda s, _i=i: ...`` would be
-    WRONG here — F.transform treats any 2-parameter callable (default
-    args included) as an (element, index) lambda."""
-    return lambda s: F.xxhash64(s, F.lit(i))
-
-
-def minhash_signature(shingles: Column, n_hashes: int = 12) -> Column:
-    """array<long> of per-hash minima via pure Column expressions.
-
-    REFERENCE implementation only: higher-order-function lambdas are
-    interpreted (~4µs/eval), so 12 families × hundreds of shingles costs
-    ~20ms/doc — measured 20s per 1k docs. The production path is
-    ``minhash_sig_from_hashes_udf`` (vectorized numpy over Arrow batches,
-    ~100× faster); this expression form remains for tiny inputs and as
-    executable documentation of the semantics."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _hash_family(i)))
-            for i in range(n_hashes)
-        ]
-    )
-
-
 # deterministic 64-bit hash constants (odd multipliers → bijective mod 2^64)
 _MH_BASE = 1099511628211  # FNV-64 prime
 _MH_A = [0x9E3779B97F4A7C15 | 1, 0xBF58476D1CE4E5B9 | 1, 0x94D049BB133111EB | 1,
@@ -359,32 +293,18 @@ def hashed_shingle_frame(
     df: DataFrame, text_col: str = "text", key_col: str = "doc_id", *, k: int = 5
 ) -> DataFrame:
     """(k, sh: array<long>) distinct shingle hashes — the verify-join
-    input (same staging rationale as shingle_frame)."""
+    input. Normalized in one projection, hashed in the next, so the
+    regexp normalization runs once per row: shingling an inline
+    ``normalize_text(...)`` with a per-element lambda re-evaluates it
+    per shingle (measured ~10× on 400-shingle docs). Empty docs are
+    dropped on the scalar column: a later ``filter(size(sh) > 0)``
+    would be pushed below the projection and re-run the normalization
+    per element (measured 5 s → 35 s on 1k docs)."""
     normed = _fan_out(df).select(
         F.col(key_col).cast("string").alias("k"),
         normalize_text(F.col(text_col)).alias("_t"),
     ).filter(F.length("_t") > 0)
     return normed.select("k", shingle_hash_set_udf(k)(F.col("_t")).alias("sh"))
-
-
-def shingle_set_udf(k: int = 5):
-    """Vectorized distinct k-shingles: normalized text → array<string>.
-    Used by the exact-Jaccard verify join; same escape-hatch rationale
-    as minhash_sig_from_hashes_udf."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _sh(t: pd.Series) -> pd.Series:
-        out = []
-        for s in t:
-            if not s:
-                out.append([])
-            elif len(s) < k:
-                out.append([s])
-            else:
-                out.append(list({s[i : i + k] for i in range(len(s) - k + 1)}))
-        return pd.Series(out)
-
-    return _sh
 
 
 def band_signatures(sig: Column, n_bands: int = 6, rows_per_band: int = 2) -> Column:
@@ -493,73 +413,6 @@ def minhash_candidates_from_sets(
     return pairs.select(F.col("p.a").alias("a"), F.col("p.b").alias("b")).distinct()
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    *,
-    k: int = 5,
-    threshold: float = 0.7,
-    prefilter: bool = True,
-    hashed: bool = True,
-    sets_: DataFrame | None = None,
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs → (a, b, jaccard).
-
-    Two scale guards (dense corpora produce millions of candidates):
-
-    1. **Size-ratio prefilter** — J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so
-       pairs whose shingle-set sizes differ too much are dropped with an
-       integer compare before any array materializes. Exact (zero false
-       negatives; 1e-6 margin covers the round-to-6 boundary).
-    2. **Explicit repartition of the pair frame** — candidate pairs are
-       tiny in bytes, so AQE coalesces them into 1-2 partitions and the
-       expensive per-pair array intersection runs nearly serial
-       (measured 86s → parallel after repartition at 2.6M pairs).
-
-    ``prefilter=False`` skips guard 1 (use when the candidate generator
-    already applied it — minhash_dedup_pairs does, inside the bucket
-    pair expansion). ``hashed=True`` intersects distinct shingle HASHES
-    (array<long>) instead of shingle strings — same Jaccard up to
-    negligible 64-bit collisions, far cheaper to move and compare.
-    ``sets_``: a pre-staged (k, sh) frame — pass the SAME (persisted)
-    frame the candidate generator consumed to avoid a second corpus
-    scan + normalization pass.
-    """
-    spark = df.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
-    if sets_ is None:
-        if hashed:
-            sets_ = hashed_shingle_frame(df, text_col, key_col, k=k)
-        else:
-            sets_ = shingle_frame(df, text_col, key_col, k=k)
-    pre = candidates.repartition(n_parts, "a")
-    if prefilter:
-        sizes = sets_.select("k", F.size("sh").alias("n"))
-        pre = (
-            pre
-            .join(F.broadcast(sizes.select(F.col("k").alias("a"), F.col("n").alias("na"))), "a")
-            .join(F.broadcast(sizes.select(F.col("k").alias("b"), F.col("n").alias("nb"))), "b")
-            .filter(
-                F.least("na", "nb").cast("double") / F.greatest("na", "nb")
-                >= threshold - 1e-6
-            )
-            .select("a", "b")
-            .repartition(n_parts, "a")
-        )
-    a = sets_.select(F.col("k").alias("a"), F.col("sh").alias("sh_a"))
-    b = sets_.select(F.col("k").alias("b"), F.col("sh").alias("sh_b"))
-    j = pre.join(a, "a").join(b, "b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        j.select("a", "b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -587,6 +440,13 @@ def minhash_dedup_pairs(
     (recomputing instead costs a second full scan + normalize + hash
     of the corpus). At extreme scale write the frame to a temp table
     instead of executor-local spill; the plan shape is identical.
+
+    Verify scale guards (dense corpora produce millions of candidates):
+    the size-ratio prefilter J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|) runs
+    inside the bucket pair expansion (1e-6 margin covers the round-to-6
+    boundary), and the verify intersects distinct shingle HASHES
+    (array<long>) — the same Jaccard up to negligible 64-bit
+    collisions, far cheaper to move and compare than strings.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -597,9 +457,21 @@ def minhash_dedup_pairs(
         sets_, n_hashes=n_hashes, n_bands=n_bands,
         max_bucket=max_bucket, size_ratio_min=threshold - 1e-6,
     )
-    return jaccard_pairs(
-        df, cands, text_col, key_col, k=k, threshold=threshold,
-        prefilter=False, sets_=sets_,
+    # explicit repartition of the pair frame: candidate pairs are tiny
+    # in bytes, so AQE coalesces them into 1-2 partitions and the
+    # expensive per-pair array intersection runs nearly serial
+    # (measured 86s → parallel after repartition at 2.6M pairs)
+    n_parts = max(df.sparkSession.sparkContext.defaultParallelism * 2, 16)
+    pre = cands.repartition(n_parts, "a")
+    a = sets_.select(F.col("k").alias("a"), F.col("sh").alias("sh_a"))
+    b = sets_.select(F.col("k").alias("b"), F.col("sh").alias("sh_b"))
+    j = pre.join(a, "a").join(b, "b")
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    return (
+        j.select("a", "b", F.round(jac, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -613,8 +485,8 @@ def word_ngram_frame(
     """(k, grams: array<string>) — DISTINCT word n-grams of the
     normalized text; docs shorter than n tokens contribute their whole
     token sequence as the single gram (short exact dups still match).
-    Normalization staged in its own projection (shingle_frame PERF
-    note applies verbatim)."""
+    Normalization staged in its own projection (the
+    hashed_shingle_frame PERF note applies verbatim)."""
     normed = _fan_out(df).select(
         F.col(key_col).cast("string").alias("k"),
         normalize_text(F.col(text_col)).alias("_t"),
@@ -670,7 +542,7 @@ def ngram_jaccard_pairs(
     (pre-ordering, ANY popular trigram in a short doc's prefix did).
     Raise ``max_bucket`` for a strict-recall run.
 
-    The verify stage reuses jaccard_pairs' scale guards: in-bucket pair
+    The verify stage reuses minhash_dedup_pairs' scale guards: in-bucket pair
     expansion (no self-join) capped at ``max_bucket``, size-ratio
     prefilter applied pre-explode (J ≤ min/max set sizes), explicit
     repartition before the per-pair array intersection (AQE would
@@ -1017,38 +889,15 @@ def simhash_candidates(
 # 4. embedding near-dup
 # ---------------------------------------------------------------------------
 
-def cosine_sim(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Exact cosine between two array<float/double> columns.
-
-    Default (``dim=None``): higher-order functions (zip_with +
-    aggregate) — correct for any/ragged length, but HOFs are
-    CodegenFallback: every fold step dispatches interpreted inside
-    the codegen'd projection (~17k rows/s/32-cores measured on the PQ
-    path, CLAUDE.md r5).
-
-    With ``dim`` set (caller guarantees both arrays have EXACTLY that
-    length — ragged rows would turn into NULL→0.0 instead of a
-    partial-sum cosine): the three folds unroll into left-to-right
-    literal chains ``0.0 + t0 + t1 + …`` — the SAME sequence of IEEE
-    additions in the SAME order, so results are BIT-IDENTICAL to the
-    fold (the q219 PQ-unroll lesson, 11× measured there; oracles that
-    replay fold arithmetic stay untouched) while the whole expression
-    joins whole-stage codegen. F.get (NULL on out-of-bounds, never an
-    ANSI throw) reads the elements."""
-    if dim is not None:
-        dot: Column = F.lit(0.0)
-        na2: Column = F.lit(0.0)
-        nb2: Column = F.lit(0.0)
-        for i in range(int(dim)):
-            xa = F.get(a, i).cast("double")
-            xb = F.get(b, i).cast("double")
-            dot = dot + xa * xb
-            na2 = na2 + xa * xa
-            nb2 = nb2 + xb * xb
-        na, nb = F.sqrt(na2), F.sqrt(nb2)
-        return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(
-            F.lit(0.0)
-        )
+def cosine_sim(a: Column, b: Column) -> Column:
+    """Exact cosine between two array<float/double> columns:
+    higher-order functions (zip_with + aggregate) — correct for
+    any/ragged length, but HOFs are CodegenFallback: every fold step
+    dispatches interpreted inside the codegen'd projection (~17k
+    rows/s/32-cores measured on the PQ path, CLAUDE.md r5). Callers
+    that can guarantee an exact width score with numpy kernels instead
+    (``embedding_pair_cos``, the explicit-``dim`` verify of
+    ``embedding_neardup_lsh``)."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -1234,7 +1083,7 @@ def embedding_neardup_pairs(
     a = df.select(F.col(key_col).alias("a"), F.col(vec_col).alias("va"))
     b = df.select(F.col(key_col).alias("b"), F.col(vec_col).alias("vb"))
     pairs = a.join(b, F.col("a") < F.col("b"))
-    sim = cosine_sim(F.col("va"), F.col("vb"), None)
+    sim = cosine_sim(F.col("va"), F.col("vb"))
     return pairs.select("a", "b", sim.alias("cos")).filter(F.col("cos") >= threshold).select("a", "b")
 
 
@@ -1270,9 +1119,10 @@ def embedding_neardup_lsh(
     omitted, a one-row limit-scan infers it — a deliberate, documented
     small driver action, not a hidden full scan. An EXPLICIT dim is
     also the caller's every-vector-is-exactly-dim guarantee, which
-    lets the in-bucket verify use the unrolled (whole-stage-codegen,
-    bit-identical) cosine; an inferred dim keeps the fold form so
-    ragged vectors keep their partial-sum cosine semantics."""
+    lets the in-bucket verify run as a numpy kernel (one blocked
+    dot-product batch per bucket, bit-identical cos); an inferred dim
+    keeps the ``cosine_sim`` fold so ragged vectors keep their
+    partial-sum cosine semantics."""
     explicit_dim = dim is not None
     if dim is None:
         # NULL-safe: the first ROW may carry a NULL/empty vector
@@ -1422,7 +1272,7 @@ def embedding_neardup_lsh(
         ).alias("p")
     ).select("p.a", "p.b", "p.va", "p.vb")
     # in-bucket verify: inferred dim keeps the ragged-safe fold
-    sim = cosine_sim(F.col("va"), F.col("vb"), None)
+    sim = cosine_sim(F.col("va"), F.col("vb"))
     return (
         pairs.select("a", "b", sim.alias("cos"))
         .filter(F.col("cos") >= threshold)

@@ -19,7 +19,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from validate_spark.operators.stats import numeric_histogram, length_histogram
+from validate_spark.operators.stats import numeric_histogram
 
 
 @dataclass
@@ -105,38 +105,6 @@ def numeric_drift(
     """Drift between two live DataFrames on a numeric column."""
     h_cur = numeric_histogram(cur, col, lo=lo, hi=hi, n_buckets=n_buckets).collect()
     h_ref = numeric_histogram(ref, col, lo=lo, hi=hi, n_buckets=n_buckets).collect()
-    return _report(_hist_to_counts(h_cur, n_buckets), _hist_to_counts(h_ref, n_buckets), method)
-
-
-def length_drift(
-    cur: DataFrame,
-    ref: DataFrame,
-    col: str,
-    *,
-    bucket_width: int = 50,
-    max_buckets: int = 64,
-    method: str = "chi2",
-) -> DriftReport:
-    h_cur = length_histogram(cur, col, bucket_width=bucket_width, max_buckets=max_buckets).collect()
-    h_ref = length_histogram(ref, col, bucket_width=bucket_width, max_buckets=max_buckets).collect()
-    return _report(_hist_to_counts(h_cur, max_buckets), _hist_to_counts(h_ref, max_buckets), method)
-
-
-def drift_vs_snapshot(
-    cur: DataFrame,
-    snapshot: DataFrame,
-    col: str,
-    *,
-    n_buckets: int = 64,
-    bucket_width: int = 50,
-    method: str = "chi2",
-) -> DriftReport:
-    """Drift of a live DataFrame vs a persisted histogram snapshot table
-    (documents_ref_hist(col, bucket, cnt) — FIXTURES.md §2)."""
-    h_cur = length_histogram(cur, col, bucket_width=bucket_width, max_buckets=n_buckets).collect()
-    h_ref = (
-        snapshot.filter(F.col("col") == col).select("bucket", "cnt").collect()
-    )
     return _report(_hist_to_counts(h_cur, n_buckets), _hist_to_counts(h_ref, n_buckets), method)
 
 

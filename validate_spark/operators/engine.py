@@ -364,25 +364,24 @@ def write_routed(
     path: str,
     *,
     mode: str = "append",
-    include_violation_detail: bool = True,
 ) -> None:
     """Quarantine routing in ONE scan: every row lands under
     ``<path>/verdict=true|false/`` via ``partitionBy`` — clean rows feed
     the downstream pipeline, failing rows go to quarantine, and the
     table is read in a single pass (two separate filtered writes would
-    scan 10^12 rows twice). Failing rows optionally carry their failed
-    (field, validator, message) structs for triage."""
+    scan 10^12 rows twice). Failing rows carry their failed (field,
+    validator, message) structs in ``_violations`` for triage (NULL on
+    passing rows)."""
     ann = result.annotated
     data_cols = [
         c for c in ann.columns if c not in (RESULTS_COL, FAILED_COL, PASS_COL)
     ]
-    out_cols = list(data_cols)
-    if include_violation_detail:
-        out_cols.append(
-            F.when(~F.col(PASS_COL), F.col(FAILED_COL)).alias("_violations")
-        )
     (
-        ann.select(*out_cols, F.col(PASS_COL).alias("verdict"))
+        ann.select(
+            *data_cols,
+            F.when(~F.col(PASS_COL), F.col(FAILED_COL)).alias("_violations"),
+            F.col(PASS_COL).alias("verdict"),
+        )
         .write.mode(mode)
         .partitionBy("verdict")
         .parquet(path)

@@ -91,10 +91,10 @@ def brute_force_topk(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    include_self: bool = False,
 ) -> DataFrame:
     """Exact top-k: (query_id, neighbor_id, rank), cosine-desc, id-asc
-    tie-break (fully deterministic → oracle-comparable).
+    tie-break (fully deterministic → oracle-comparable). A corpus row
+    whose id equals the query id is never a neighbor of that query.
 
     With queries broadcast, scoring is map-side and vectors are pruned
     before any exchange; ``_two_phase_topk`` does the skew-free
@@ -106,9 +106,7 @@ def brute_force_topk(
         )
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    scored = c.crossJoin(q)
-    if not include_self:
-        scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = c.crossJoin(q).filter(F.col("neighbor_id") != F.col("query_id"))
     scored = scored.select(
         "query_id",
         "neighbor_id",
@@ -124,17 +122,30 @@ def assign_ivf_buckets(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Add ``bucket`` = argmax-cosine centroid id. Centroids are plan
-    literals (broadcast-by-construction); one narrow projection."""
+    literals (broadcast-by-construction); one narrow projection.
+
+    The argmax is one ``array_max`` over (score, -position, bucket)
+    structs, so each centroid's cosine appears once in the plan (a
+    when/otherwise chain that carries the best score forward holds it
+    twice per centroid and doubles the tree with each one). Struct
+    order makes it the left-to-right ``score > best`` scan: ties
+    (±0.0 equal) go to the first centroid, NaN ranks above every
+    number, NULL below; the leading (-2.0, bucket 0) seed is the scan's
+    starting best, so an all-NULL row lands in bucket 0."""
     v = F.col(vec_col)
-    best_b = F.lit(0)
-    best_s = F.lit(-2.0)
+    cands = [F.struct(F.lit(-2.0).alias("s"), F.lit(0).alias("o"), F.lit(0).alias("b"))]
     for ci, cvec in enumerate(centroids):
         cl = F.array(*[F.lit(float(x)) for x in cvec])
-        s = cosine_sim(v, cl)
-        take = s > best_s
-        best_b = F.when(take, F.lit(ci)).otherwise(best_b)
-        best_s = F.when(take, s).otherwise(best_s)
-    return corpus.withColumn("bucket", best_b.cast("int"))
+        cands.append(
+            F.struct(
+                cosine_sim(v, cl).alias("s"),
+                F.lit(-1 - ci).alias("o"),
+                F.lit(ci).alias("b"),
+            )
+        )
+    return corpus.withColumn(
+        "bucket", F.array_max(F.array(*cands)).getField("b").cast("int")
+    )
 
 
 def sample_centroids(
@@ -502,7 +513,6 @@ def sq8_topk(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    include_self: bool = False,
 ) -> DataFrame:
     """Compressed-domain ANN: candidates by INTEGER dot product over
     scalar-quantized (8-bit) codes, then exact-cosine rerank of the
@@ -541,9 +551,7 @@ def sq8_topk(
             "query_id", _sq8_encode(F.col("qv"), F.col("lo"), F.col("hi")).alias("qq")
         )
     )
-    scored = c.crossJoin(q)
-    if not include_self:
-        scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = c.crossJoin(q).filter(F.col("neighbor_id") != F.col("query_id"))
     int_dot = F.aggregate(
         F.zip_with(F.col("cq"), F.col("qq"), lambda a, b: (a * b).cast("long")),
         F.lit(0).cast("long"),
@@ -719,7 +727,6 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    include_self: bool = False,
 ) -> DataFrame:
     """Product-quantization ANN with Asymmetric Distance Computation:
     corpus vectors live as m small codes (here m bytes vs d·4 vector
@@ -784,9 +791,9 @@ def pq_adc_topk(
             )
 
     tbl = q.mapInPandas(tblf, schema=f"query_id {qid_t}, tbl array<long>")
-    scored = codes.crossJoin(F.broadcast(tbl))
-    if not include_self:
-        scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = codes.crossJoin(F.broadcast(tbl)).filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
         F.lit(0).cast("long"),
@@ -882,7 +889,6 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    include_self: bool = False,
 ) -> DataFrame:
     """IVF-PQ: the production billion-vector ANN layout — coarse
     inverted lists (IVF, q20) select WHICH vectors to score, product
@@ -1002,11 +1008,11 @@ def ivf_pq_topk(
     tbl = q.mapInPandas(
         tblf, schema=f"query_id {qid_t}, _probes array<int>, tbl array<long>"
     )
-    scored = codes.crossJoin(F.broadcast(tbl)).filter(
-        F.array_contains(F.col("_probes"), F.col("_bkt"))
+    scored = (
+        codes.crossJoin(F.broadcast(tbl))
+        .filter(F.array_contains(F.col("_probes"), F.col("_bkt")))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    if not include_self:
-        scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
         F.lit(0).cast("long"),

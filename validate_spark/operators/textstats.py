@@ -227,7 +227,7 @@ def annotate_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     signal column re-splits — measured 1.2 s → 0.7 s at 600k docs), and
     the input is fanned out to cluster parallelism first (a 1-partition
     parquet scan otherwise runs the whole projection on one core —
-    measured 12.5 s → 1.2 s; the shingle_frame lesson again)."""
+    measured 12.5 s → 1.2 s; the hashed_shingle_frame lesson again)."""
     from validate_spark.session import fan_out
 
     t = F.trim(F.coalesce(F.col(text_col), F.lit("")))
@@ -1237,8 +1237,6 @@ def oov_report(
     vocab: DataFrame,
     text_col: str = "text",
     group_col: str = "lang",
-    *,
-    with_fertility: bool = True,
 ) -> DataFrame:
     """Tokenizer coverage report: per group (language), how much of
     the corpus a fixed vocabulary actually covers — the table read
@@ -1267,11 +1265,7 @@ def oov_report(
     staged = fan_out(df).select(
         g.alias("_g"),
         normalize_text(F.col(text_col)).alias("_t"),
-        (
-            bpe_token_count(F.col(text_col))
-            if with_fertility
-            else F.lit(0)
-        ).cast("long").alias("_bpe"),
+        bpe_token_count(F.col(text_col)).cast("long").alias("_bpe"),
     )
     docs = staged.groupBy("_g").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -137,9 +137,3 @@ def synth_media_catalog(spark: SparkSession, n_refs: int = 100000) -> DataFrame:
         ).alias("mime"),
         (F.pmod(_h(i, 8), F.lit(10_000_000)) + 100).alias("size_bytes"),
     )
-
-
-def docs_for_sf(sf: float) -> int:
-    """documents row count per scale factor: sf0.001→6k, sf0.01→60k, sf0.1→600k
-    (matches the driver's lineitem scaling convention, TESTDATA.md)."""
-    return max(1000, int(sf * 6_000_000))

@@ -31,10 +31,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from validate_spark.operators.stats import kmv_merge, kmv_sketch
 
 
-def _state_schema_ddl(groups_ddl: str) -> str:
-    return f"{groups_ddl}, kmv_state array<bigint>"
-
-
 def kmv_stream_updater(
     state_path: str,
     value_col: str,
