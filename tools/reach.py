@@ -28,7 +28,12 @@ depend on more than one literal option (``__spark_entry__._rows_df``).
 Blind spots: pandas-UDF and ``mapInPandas`` bodies run in Python worker
 processes, which the hook does not see (``worker_body`` marks functions
 decorated with ``pandas_udf``/``udf``); functions only a registry
-reaches by name (validators, filters) show up when a query uses them.
+reaches by name (validators, filters) show up when a query uses them;
+calls made while the ``validate_spark`` package first imports (registry
+decorators such as ``validators._v``) run before the hook is installed
+and read ``none``. ``unreached_unreferenced`` therefore lists candidates
+to check, not deletions: registered validators and filters land in it
+when no query uses them, though the rule DSL reaches them by name.
 
 ``session.fan_out`` is wrapped for the whole run: each call site's
 calls, the Spark jobs launched inside the call (the partition count of

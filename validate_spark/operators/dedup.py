@@ -329,7 +329,7 @@ def minhash_candidates(
     n_hashes: int = 12,
     n_bands: int = 6,
     max_bucket: int = 1000,
-    size_ratio_min: float | None = None,
+    size_ratio_min: float,
 ) -> DataFrame:
     """Candidate pairs (a, b) sharing ≥1 LSH band bucket, a < b —
     convenience wrapper that stages the hashed-shingle frame itself.
@@ -349,7 +349,7 @@ def minhash_candidates_from_sets(
     n_hashes: int = 12,
     n_bands: int = 6,
     max_bucket: int = 1000,
-    size_ratio_min: float | None = None,
+    size_ratio_min: float,
 ) -> DataFrame:
     """Candidate pairs (a, b) sharing ≥1 LSH band bucket, a < b, from a
     staged ``(k, sh: array<long>)`` hashed-shingle frame.
@@ -359,9 +359,8 @@ def minhash_candidates_from_sets(
     buckets (e.g. empty docs): oversized buckets are dropped here; the
     exact-dedup pass catches their members anyway.
 
-    ``size_ratio_min``: when set, pairs whose DISTINCT-shingle-count
-    ratio is below it are dropped INSIDE the pair expansion, before the
-    explode — J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so for a verify
+    ``size_ratio_min``: pairs whose DISTINCT-shingle-count ratio is
+    below it are dropped INSIDE the pair expansion, before the explode — J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so for a verify
     threshold t this is an exact-safe prefilter (pass t·(1-ε)). On
     similarity-dense corpora it cuts the exploded pair count ~25×.
     """
@@ -381,8 +380,6 @@ def minhash_candidates_from_sets(
     )
 
     def pair_ok(x, y):
-        if size_ratio_min is None:
-            return F.lit(True)
         nx = x.getField("n").cast("double")
         ny = y.getField("n").cast("double")
         return F.least(nx, ny) / F.greatest(nx, ny) >= F.lit(size_ratio_min)
@@ -1311,7 +1308,6 @@ def line_dedup(
     text_col: str = "text",
     min_docs: int = 10,
     min_chars: int = 10,
-    n_parts: int | None = None,
 ) -> DataFrame:
     """Remove boilerplate LINES that recur across many documents
     (nav bars, cookie banners, copyright footers) — the standard
@@ -1355,7 +1351,7 @@ def line_dedup(
         join where it is already spread across that key's partitions.
     """
     spark = df.sparkSession
-    n = n_parts or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     k, t = F.col(key_col), F.coalesce(F.col(text_col), F.lit(""))
 
     lines = (

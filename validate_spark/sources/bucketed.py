@@ -35,16 +35,12 @@ def write_bucketed(
     *,
     key: str,
     n_buckets: int = 8,
-    sort: bool = True,
     mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sort-within-bucket)
-    managed table. sortBy(key) upgrades later merge joins to
-    sort-free (the per-bucket files are already key-ordered)."""
-    w = df.write.mode(mode).bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
+    """Persist ``df`` as a bucketed, sorted-within-bucket managed
+    table. sortBy(key) upgrades later merge joins to sort-free (the
+    per-bucket files are already key-ordered)."""
+    df.write.mode(mode).bucketBy(n_buckets, key).sortBy(key).saveAsTable(table)
 
 
 def bucketed_join(
