@@ -1,8 +1,7 @@
 """Call-trace reachability of every function in ``validate_spark/`` and
 ``__spark_entry__.py`` from the production callers.
 
-    python tools/reach.py [--out REACH.json] [--queries q01_...,q02_...]
-                          [--workloads corpus_audit,...]
+    python tools/reach.py [--out REACH.json]
 
 Runs, in this one process and under a ``sys.setprofile`` hook that sees
 call and return events only (coverage.py is not a dependency):
@@ -263,8 +262,6 @@ def _run_script(path: str, argv: list[str]) -> int:
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--out", default=os.path.join(ROOT, "REACH.json"))
-    ap.add_argument("--queries", help="comma-separated query names (default: all)")
-    ap.add_argument("--workloads", default=",".join(WORKLOADS))
     args = ap.parse_args()
 
     sys.path.insert(0, ROOT)
@@ -282,13 +279,12 @@ def main() -> int:
 
         spark = get_spark(app="oracle_check", cores=8, shuffle_partitions=8)
         status["entry_rows"] = len(__spark_entry__.entry(spark).collect())
-        qs = args.queries.split(",") if args.queries else []
-        status["check_oracle"] = _run_script(os.path.join(ROOT, "tools", "check_oracle.py"), qs)
+        status["check_oracle"] = _run_script(os.path.join(ROOT, "tools", "check_oracle.py"), [])
         _drop_gateway()
 
         tr.phase = fan.phase = "perfbench"
         sys.path.insert(0, os.path.join(ROOT, "perfbench"))
-        for wl in filter(None, args.workloads.split(",")):
+        for wl in WORKLOADS:
             status[f"perfbench:{wl}"] = _run_script(
                 os.path.join(ROOT, "perfbench", "run.py"),
                 ["--workload", wl, "--seed", "1", "--seconds", "0", "--size", "smoke"],
