@@ -881,3 +881,7 @@ def test_memoized_plan_serves_other_frames(spark):
 
 def test_get_spark_turns_off_call_site_capture(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_get_spark_sizes_the_codegen_cache(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"

@@ -1047,13 +1047,88 @@ def test_mh_family_frozen_prefix_and_extension():
     assert dd._mh_family(24) == (a24, c24)
 
 
-def test_minhash_sig_udf_length_matches_n_hashes(spark):
-    df = spark.createDataFrame([("a", [1, 2, 3, 99])], "k string, sh array<long>")
-    for n in (12, 24):
-        row = df.select(
-            dd.minhash_sig_from_hashes_udf(n)(F.col("sh")).alias("sig")
-        ).first()
-        assert len(row["sig"]) == n
+def _ref_shingle_sig(text, k, n_hashes):
+    """Plain-Python reference of shingle_sig_udf: distinct rolling
+    hashes over UTF-8 bytes (sorted as uint64, emitted as int64) and
+    the min over the _mh_family affine family."""
+    m = 1 << 64
+    b = text.encode("utf-8")
+    windows = [b] if len(b) < k else [b[i : i + k] for i in range(len(b) - k + 1)]
+    hs = sorted({sum(x * dd._MH_BASE**j for j, x in enumerate(w)) % m for w in windows})
+    a, c = dd._mh_family(n_hashes)
+    sig = [min((ai * h + ci) % m for h in hs) for ai, ci in zip(a, c)]
+
+    def signed(x):
+        return x - m if x >= 1 << 63 else x
+
+    return [signed(h) for h in hs], [signed(x) for x in sig]
+
+
+def test_shingle_sig_udf_matches_python_reference(spark):
+    """One Arrow pass gives the distinct shingle hashes and their
+    MinHash signature; both equal a plain-Python reference, and the
+    hashes equal the (k, sh) UDF's, so a SETS index and a signed frame
+    hash alike."""
+    texts = [
+        "abc",  # shorter than k: one shingle
+        "the quick brown fox jumps over the lazy dog",
+        "héllo wörld ☃ naïve café",  # multi-byte UTF-8
+        "abcabcabcabcabcabc",  # repeated shingles
+        "",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    rows = df.coalesce(1).select(
+        "i",
+        dd.shingle_hash_set_udf(5)(F.col("t")).alias("sh"),
+        *[dd.shingle_sig_udf(5, n)(F.col("t")).alias(f"s{n}") for n in (12, 24)],
+    ).collect()
+    for r in rows:
+        t = texts[r["i"]]
+        for n in (12, 24):
+            got = r[f"s{n}"]
+            if not t:
+                assert got["sh"] == [] and got["sig"] is None
+                continue
+            sh, sig = _ref_shingle_sig(t, 5, n)
+            assert got["sh"] == sh == r["sh"], t
+            assert got["sig"] == sig and len(sig) == n, t
+
+
+def test_dedup_clusters_converged_pairs_one_round_no_count_job(spark, tmp_path):
+    """Pairs already at their fixed point after initialization run one
+    propagation round, and the round's own checkpoint job observes the
+    changed-label count: past the jobs of ``max_iter=0`` (initialization
+    alone) the call runs exactly one checkpoint job, and that job is the
+    call's last — no job runs after it to test convergence."""
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # a JVM-local relation: a Python-list frame re-runs a Python scan
+    # per action, which would dominate this test's time
+    pairs = spark.sql("VALUES ('a', 'b'), ('c', 'd'), ('f', 'e') AS t(a, b)")
+
+    def job_names(group, **kw):
+        """Last-stage name of every job the call ran, in job order."""
+        sc.setJobGroup(group, group)
+        try:
+            out = dd.dedup_clusters(pairs, **kw)
+        finally:
+            sc.setJobGroup("", "")
+        names = [
+            tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)).name
+            for j in sorted(tracker.getJobIdsForGroup(group))
+        ]
+        return out, names
+
+    for reliable in (False, True):
+        ckpt = "checkpoint" if reliable else "localCheckpoint"
+        _, init = job_names(f"dc_init_{reliable}", max_iter=0, reliable=reliable)
+        out, full = job_names(f"dc_full_{reliable}", reliable=reliable)
+        ops = [n.split(" at ")[0] for n in full]
+        assert ops[len(init):].count(ckpt) == 1, full
+        assert ops[-1] == ckpt, full
+        got = {(r["member"], r["cluster"]) for r in out.collect()}
+        assert got == {("a", "a"), ("b", "a"), ("c", "c"), ("d", "c"), ("e", "e"), ("f", "e")}
 
 
 def test_quality_quantile_filter_exact(spark):

@@ -276,11 +276,11 @@ def test_ngram_jaccard_prefix_filtered_no_full_self_join(spark):
 
 def test_minhash_pipeline_single_scan(spark):
     """q16's near-dup pipeline must normalize + shingle-hash the corpus
-    exactly ONCE: the staged (k, sh) frame is persisted and BOTH the
-    signature/banding branch and the exact-Jaccard verify join read it
+    exactly ONCE: the staged (k, sh, sig) frame is persisted and BOTH
+    the banding branch and the exact-Jaccard verify join read it
     as InMemoryTableScan. Structurally, only the cached relation's
-    definition may contain the shingle UDF (_shh) — the live (non-cache)
-    part of the plan carries only the sig-from-hashes UDF."""
+    definition may contain the one shingle-and-signature UDF (_shsig) —
+    the live (non-cache) part of the plan carries no Python UDF."""
     from validate_spark.operators import dedup as dd
 
     docs = spark.read.parquet(DOCS)
@@ -293,6 +293,46 @@ def test_minhash_pipeline_single_scan(spark):
     # belongs to an InMemoryRelation definition (count parity holds
     # because the live plan reads only InMemoryTableScan)
     assert plan.count("Scan parquet") == plan.count("InMemoryRelation")
+
+
+def test_candidate_pair_dedup_reuses_pair_repartition(spark):
+    """MinHash and AllPairs candidates are de-duplicated after the
+    explicit repartition on ``a``: the distinct reuses that hash
+    partitioning, so no Exchange on (a, b) of its own."""
+    import re
+
+    from validate_spark.operators import dedup as dd
+
+    docs = spark.read.parquet(DOCS)
+    for name, df in {
+        "minhash": dd.minhash_dedup_pairs(docs, threshold=0.9),
+        "ngram": dd.ngram_jaccard_pairs(docs, threshold=0.8),
+    }.items():
+        plan = physical(df)
+        assert re.search(r"Exchange hashpartitioning\(a#\d+, \d+\), REPARTITION_BY_NUM", plan), name
+        assert not re.search(r"Exchange hashpartitioning\(a#\d+, b#\d+", plan), name
+
+
+def test_dedup_clusters_label_init_reads_cached_adjacency(spark):
+    """Label initialization groups the cached adjacency by ``u``, which
+    the adjacency is already partitioned by: its final plan reads the
+    cache with no Exchange above it."""
+    from validate_spark.operators import dedup as dd
+
+    i = F.col("id")
+    pairs = spark.range(12).select(
+        i.cast("string").alias("a"), (i + 1).cast("string").alias("b")
+    )
+    adj = dd._adjacency(pairs).cache()
+    try:
+        init = dd._initial_labels(adj)
+        init.collect()
+        final = physical(init).split("== Final Plan ==", 1)[1]
+        above_cache = final.split("InMemoryRelation", 1)[0]
+        assert "InMemoryTableScan" in above_cache
+        assert "Exchange" not in above_cache
+    finally:
+        adj.unpersist()
 
 
 def test_dedup_clusters_plan_stays_bounded(spark):

@@ -217,41 +217,33 @@ def _mh_family(n_hashes: int) -> tuple[list[int], list[int]]:
     return a, c
 
 
-def minhash_sig_from_hashes_udf(n_hashes: int = 12):
-    """Vectorized MinHash sketch FROM distinct shingle hashes:
-    array<long> (hashed_shingle_frame output) → array<long> signature.
-
-    n_hashes affine families (a_i·h + c_i mod 2⁶⁴) → column minima, all
-    numpy over Arrow batches. Taking hashed shingles as INPUT (instead
-    of re-normalizing + re-shingling the text) lets the whole near-dup
-    pipeline run off ONE staged (k, sh) frame — the signature/banding
-    branch and the exact-Jaccard verify branch share a single corpus
-    scan + normalization + shingling pass (at 100 TB the second full
-    scan this replaces was the dominant cost of minhash_dedup_pairs).
-    Signatures are bit-identical to the former text→sig UDF: the int64
-    round-trip through the array<long> column preserves the uint64 bit
-    pattern, min is order-independent."""
+def _shingle_hasher(k: int):
+    """The one k-shingle hash: a function from normalized text to its
+    sorted distinct shingle hashes (uint64 ndarray). Each shingle is a
+    polynomial rolling hash (base ``_MH_BASE``, mod 2⁶⁴) over k UTF-8
+    bytes; text shorter than k bytes hashes as one shingle. Shared by
+    the (k, sh) and the (k, sh, sig) UDFs, so a SETS index and a signed
+    frame hash identically. Call it inside ``np.errstate(over="ignore")``.
+    """
     import numpy as np
 
-    a, c = _mh_family(n_hashes)
-    A = np.array(a, dtype=np.uint64)
-    C = np.array(c, dtype=np.uint64)
+    POW = np.power(
+        np.uint64(_MH_BASE), np.arange(k, dtype=np.uint64), dtype=np.uint64
+    )
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(sh: pd.Series) -> pd.Series:
-        with np.errstate(over="ignore"):
-            out = []
-            for arr in sh:
-                if arr is None or len(arr) == 0:
-                    out.append(None)
-                    continue
-                hu = np.asarray(arr, dtype=np.int64).view(np.uint64)
-                out.append(
-                    ((hu[:, None] * A[None, :] + C).min(axis=0)).astype(np.int64)
-                )
-            return pd.Series(out)
+    def hashes(s: str):
+        b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
+        if len(b) < k:
+            h = np.array(
+                [(b.astype(np.uint64) * POW[: len(b)]).sum(dtype=np.uint64)],
+                dtype=np.uint64,
+            )
+        else:
+            w = np.lib.stride_tricks.sliding_window_view(b, k).astype(np.uint64)
+            h = (w * POW).sum(axis=1, dtype=np.uint64)
+        return np.unique(h)
 
-    return _sig
+    return hashes
 
 
 def shingle_hash_set_udf(k: int = 5):
@@ -262,49 +254,96 @@ def shingle_hash_set_udf(k: int = 5):
     moves 8-byte longs instead of strings and intersects JVM-native."""
     import numpy as np
 
-    POW = np.power(
-        np.uint64(_MH_BASE), np.arange(k, dtype=np.uint64), dtype=np.uint64
-    )
+    hashes = _shingle_hasher(k)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _shh(t: pd.Series) -> pd.Series:
         with np.errstate(over="ignore"):
-            out = []
-            for s in t:
-                if not s:
-                    out.append([])
-                    continue
-                b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
-                if len(b) < k:
-                    h = np.array(
-                        [(b.astype(np.uint64) * POW[: len(b)]).sum(dtype=np.uint64)],
-                        dtype=np.uint64,
-                    )
-                else:
-                    w = np.lib.stride_tricks.sliding_window_view(b, k).astype(np.uint64)
-                    h = (w * POW).sum(axis=1, dtype=np.uint64)
-                out.append(np.unique(h).astype(np.int64))
-            return pd.Series(out)
+            return pd.Series(
+                [hashes(s).astype(np.int64) if s else [] for s in t]
+            )
 
     return _shh
+
+
+def shingle_sig_udf(k: int = 5, n_hashes: int = 12):
+    """Vectorized distinct k-shingle hashes AND their MinHash signature
+    in ONE Arrow pass: normalized text → struct<sh: array<long>,
+    sig: array<long>>. ``sig`` is the column minima of the n_hashes
+    affine families (a_i·h + c_i mod 2⁶⁴, ``_mh_family``) over the same
+    ``np.unique`` result that becomes ``sh``. A separate
+    hashes → signature UDF would ship every shingle array back to
+    Python for a second pass (the whole staged frame, ~8× the text
+    bytes). Signatures are bit-identical to that two-pass form: ``sh``
+    holds the uint64 bit pattern as int64, and min is order-independent.
+    Empty text gives ``sh = []`` and ``sig = NULL``."""
+    import numpy as np
+
+    hashes = _shingle_hasher(k)
+    a, c = _mh_family(n_hashes)
+    A = np.array(a, dtype=np.uint64)
+    C = np.array(c, dtype=np.uint64)
+
+    @F.pandas_udf("sh array<bigint>, sig array<bigint>")
+    def _shsig(t: pd.Series) -> pd.DataFrame:
+        sh, sig = [], []
+        with np.errstate(over="ignore"):
+            for s in t:
+                if not s:
+                    sh.append([])
+                    sig.append(None)
+                    continue
+                h = hashes(s)
+                sh.append(h.astype(np.int64))
+                sig.append((h[:, None] * A[None, :] + C).min(axis=0).astype(np.int64))
+        return pd.DataFrame({
+            "sh": pd.Series(sh, dtype=object), "sig": pd.Series(sig, dtype=object)
+        })
+
+    return _shsig
+
+
+def _normalized_frame(df: DataFrame, text_col: str, key_col: str) -> DataFrame:
+    """(k, _t) keys and normalized text, empty texts dropped. The
+    normalization runs in its own projection, once per row: shingling
+    an inline ``normalize_text(...)`` with a per-element lambda
+    re-evaluates it per shingle (measured ~10× on 400-shingle docs).
+    Empty docs are dropped on the scalar column: a later
+    ``filter(size(sh) > 0)`` would be pushed below the projection and
+    re-run the normalization per element (measured 5 s → 35 s on 1k
+    docs). So ``sh`` is never empty downstream."""
+    return _fan_out(df).select(
+        F.col(key_col).cast("string").alias("k"),
+        normalize_text(F.col(text_col)).alias("_t"),
+    ).filter(F.length("_t") > 0)
 
 
 def hashed_shingle_frame(
     df: DataFrame, text_col: str = "text", key_col: str = "doc_id", *, k: int = 5
 ) -> DataFrame:
     """(k, sh: array<long>) distinct shingle hashes — the verify-join
-    input. Normalized in one projection, hashed in the next, so the
-    regexp normalization runs once per row: shingling an inline
-    ``normalize_text(...)`` with a per-element lambda re-evaluates it
-    per shingle (measured ~10× on 400-shingle docs). Empty docs are
-    dropped on the scalar column: a later ``filter(size(sh) > 0)``
-    would be pushed below the projection and re-run the normalization
-    per element (measured 5 s → 35 s on 1k docs)."""
-    normed = _fan_out(df).select(
-        F.col(key_col).cast("string").alias("k"),
-        normalize_text(F.col(text_col)).alias("_t"),
-    ).filter(F.length("_t") > 0)
+    input and the SETS side of a stored LSH index."""
+    normed = _normalized_frame(df, text_col, key_col)
     return normed.select("k", shingle_hash_set_udf(k)(F.col("_t")).alias("sh"))
+
+
+def signed_shingle_frame(
+    df: DataFrame,
+    text_col: str = "text",
+    key_col: str = "doc_id",
+    *,
+    k: int = 5,
+    n_hashes: int = 12,
+) -> DataFrame:
+    """(k, sh: array<long>, sig: array<long>): ``hashed_shingle_frame``
+    plus each doc's MinHash signature, from one Arrow pass
+    (``shingle_sig_udf``). The struct is unpacked in a second
+    projection; CollapseProject keeps the two apart because inlining
+    would evaluate the (non-cheap) Python UDF once per field."""
+    normed = _normalized_frame(df, text_col, key_col)
+    return normed.select(
+        "k", shingle_sig_udf(k, n_hashes)(F.col("_t")).alias("_s")
+    ).select("k", "_s.sh", "_s.sig")
 
 
 def band_signatures(sig: Column, n_bands: int = 6, rows_per_band: int = 2) -> Column:
@@ -331,20 +370,20 @@ def minhash_candidates(
     max_bucket: int = 1000,
     size_ratio_min: float,
 ) -> DataFrame:
-    """Candidate pairs (a, b) sharing ≥1 LSH band bucket, a < b —
-    convenience wrapper that stages the hashed-shingle frame itself.
-    ``minhash_dedup_pairs`` stages the frame ONCE and calls
+    """Distinct candidate pairs (a, b) sharing ≥1 LSH band bucket,
+    a < b — convenience wrapper that stages the signed shingle frame
+    itself. ``minhash_dedup_pairs`` stages the frame ONCE and calls
     ``minhash_candidates_from_sets`` directly so the verify join shares
     the same scan."""
-    sets_ = hashed_shingle_frame(df, text_col, key_col, k=k)
+    signed = signed_shingle_frame(df, text_col, key_col, k=k, n_hashes=n_hashes)
     return minhash_candidates_from_sets(
-        sets_, n_hashes=n_hashes, n_bands=n_bands,
+        signed, n_hashes=n_hashes, n_bands=n_bands,
         max_bucket=max_bucket, size_ratio_min=size_ratio_min,
-    )
+    ).distinct()
 
 
 def minhash_candidates_from_sets(
-    sets_: DataFrame,
+    signed: DataFrame,
     *,
     n_hashes: int = 12,
     n_bands: int = 6,
@@ -352,7 +391,13 @@ def minhash_candidates_from_sets(
     size_ratio_min: float,
 ) -> DataFrame:
     """Candidate pairs (a, b) sharing ≥1 LSH band bucket, a < b, from a
-    staged ``(k, sh: array<long>)`` hashed-shingle frame.
+    staged ``(k, sh, sig)`` frame (``signed_shingle_frame``, ``sig`` of
+    length ``n_hashes``).
+
+    NOT de-duplicated: a pair sharing several bands appears once per
+    shared band. The caller de-duplicates where its own partitioning
+    makes that free (``minhash_dedup_pairs`` after its repartition on
+    ``a``, one Exchange instead of two; ``minhash_candidates``).
 
     Pairs are generated WITHIN buckets via collect_list + array pair
     expansion — no self-join, no O(n²). ``max_bucket`` guards degenerate
@@ -365,15 +410,16 @@ def minhash_candidates_from_sets(
     similarity-dense corpora it cuts the exploded pair count ~25×.
     """
     rows_per_band = n_hashes // n_bands
-    sig = sets_.filter(F.size("sh") > 0).select(
+    # explode the band array expression itself: exploding an aliased
+    # column makes Spark infer a size(bands) > 0 filter and push it
+    # below the projection, hashing every band key twice per doc
+    exploded = signed.select(
         "k",
         F.size("sh").cast("long").alias("n"),
-        minhash_sig_from_hashes_udf(n_hashes)(F.col("sh")).alias("sig"),
+        F.posexplode(
+            band_signatures(F.col("sig"), n_bands, rows_per_band)
+        ).alias("band", "bsig"),
     )
-    banded = sig.select(
-        "k", "n", band_signatures(F.col("sig"), n_bands, rows_per_band).alias("bands")
-    )
-    exploded = banded.select("k", "n", F.posexplode("bands").alias("band", "bsig"))
     # bounded hot-bucket collection — one row per (k, band), unique
     buckets = _two_phase_buckets(
         exploded, ["band", "bsig"], F.struct("k", "n"), max_bucket
@@ -407,7 +453,7 @@ def minhash_candidates_from_sets(
             )
         ).alias("p")
     )
-    return pairs.select(F.col("p.a").alias("a"), F.col("p.b").alias("b")).distinct()
+    return pairs.select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
 
 
 def minhash_dedup_pairs(
@@ -423,13 +469,18 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact-Jaccard ≥ threshold.
 
-    SINGLE-SCAN: the corpus is normalized + shingle-hashed exactly once
-    into a persisted ``(k, sh)`` frame (MEMORY_AND_DISK — spills, never
-    OOMs) that feeds BOTH the signature/banding branch and the
-    exact-Jaccard verify join. Without the persist each branch would
-    re-run the scan + regex normalization + Arrow UDF over the full
-    corpus — at 100 TB that second pass dominated the pipeline. Blocks
-    are freed on unpersist/driver GC of the returned plan's relation.
+    SINGLE-SCAN: the corpus is normalized, shingle-hashed and signed
+    exactly once, in one Arrow pass, into a persisted ``(k, sh, sig)``
+    frame (MEMORY_AND_DISK — spills, never OOMs) that feeds BOTH the
+    banding branch and the exact-Jaccard verify join. Without the
+    persist each branch would re-run the scan + regex normalization +
+    Arrow UDF over the full corpus — at 100 TB that second pass
+    dominated the pipeline. Blocks are freed on unpersist/driver GC of
+    the returned plan's relation.
+
+    Candidates are de-duplicated AFTER the explicit ``repartition(n,
+    "a")``: the distinct aggregate reuses that hash partitioning, so a
+    pair found in several bands costs one Exchange, not two.
 
     Size trade, stated honestly: |sh| ≈ one 8-byte hash per character,
     so the staged frame is ~8× the raw text bytes — the standard
@@ -447,11 +498,11 @@ def minhash_dedup_pairs(
     """
     from pyspark.storagelevel import StorageLevel
 
-    sets_ = hashed_shingle_frame(df, text_col, key_col, k=k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    staged = signed_shingle_frame(
+        df, text_col, key_col, k=k, n_hashes=n_hashes
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     cands = minhash_candidates_from_sets(
-        sets_, n_hashes=n_hashes, n_bands=n_bands,
+        staged, n_hashes=n_hashes, n_bands=n_bands,
         max_bucket=max_bucket, size_ratio_min=threshold - 1e-6,
     )
     # explicit repartition of the pair frame: candidate pairs are tiny
@@ -459,9 +510,9 @@ def minhash_dedup_pairs(
     # expensive per-pair array intersection runs nearly serial
     # (measured 86s → parallel after repartition at 2.6M pairs)
     n_parts = max(df.sparkSession.sparkContext.defaultParallelism * 2, 16)
-    pre = cands.repartition(n_parts, "a")
-    a = sets_.select(F.col("k").alias("a"), F.col("sh").alias("sh_a"))
-    b = sets_.select(F.col("k").alias("b"), F.col("sh").alias("sh_b"))
+    pre = cands.repartition(n_parts, "a").distinct()
+    a = staged.select(F.col("k").alias("a"), F.col("sh").alias("sh_a"))
+    b = staged.select(F.col("k").alias("b"), F.col("sh").alias("sh_b"))
     j = pre.join(a, "a").join(b, "b")
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
@@ -639,9 +690,11 @@ def gram_set_jaccard_pairs(
                 )
             )
         ).alias("p")
-    ).select("p.a", "p.b").distinct()
+    ).select("p.a", "p.b")
 
-    pre = pairs.repartition(n_parts, "a")
+    # de-duplicated after the repartition: the distinct reuses its hash
+    # partitioning on a (one Exchange, not two)
+    pre = pairs.repartition(n_parts, "a").distinct()
     a = hashed.select(F.col("k").alias("a"), F.col("gh").alias("gh_a"))
     b = hashed.select(F.col("k").alias("b"), F.col("gh").alias("gh_b"))
     j = pre.join(a, "a").join(b, "b")
@@ -671,6 +724,36 @@ def _free_local_blocks(df: DataFrame) -> None:
         pass
 
 
+def _adjacency(pairs: DataFrame) -> DataFrame:
+    """(u, v) symmetric adjacency of the pair graph, self-loops and
+    repeats dropped. Partitioned by u, then de-duplicated: the distinct
+    reuses that partitioning, and so does ``_initial_labels`` once the
+    frame is cached."""
+    edges = pairs.select(
+        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
+    ).filter(F.col("u") != F.col("v"))
+    return (
+        edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .repartition("u")
+        .distinct()
+    )
+
+
+def _initial_labels(adj: DataFrame) -> DataFrame:
+    """(node, label) after propagation round 1, folded into
+    initialization: from the identity init (label = node) the first
+    round computes exactly min(u, min_{v∈N(u)} v), and the grouping
+    that builds the node set can carry that aggregate directly — one
+    join over the edge list fewer per call (r6). Same fixed point,
+    identical final labels; the loop just starts one round further
+    in."""
+    return (
+        adj.groupBy("u")
+        .agg(F.least(F.col("u"), F.min("v")).alias("label"))
+        .select(F.col("u").alias("node"), "label")
+    )
+
+
 def dedup_clusters(
     pairs: DataFrame, *, max_iter: int = 25, reliable: bool = False
 ) -> DataFrame:
@@ -688,9 +771,17 @@ def dedup_clusters(
     Cluster id = min member key.
 
     Fixed point is detected with a changed-label count — deterministic,
-    independent of partitioning. For adversarially long chains switch
-    to large-star/small-star; for dedup workloads label propagation is
-    the cheaper loop.
+    independent of partitioning — that the round's checkpoint job
+    itself computes: ``DataFrame.observe`` on the checkpointed
+    aggregate, read back from an ``Observation``. No round runs a
+    separate job just to test convergence. For adversarially long
+    chains switch to large-star/small-star; for dedup workloads label
+    propagation is the cheaper loop.
+
+    The symmetric adjacency is built as one ``repartition("u")``
+    followed by ``distinct()`` and cached: the distinct and the label
+    initialization's ``groupBy("u")`` both reuse that hash
+    partitioning, so neither adds an Exchange.
 
     ``reliable=True`` uses ``checkpoint()`` (requires
     ``sc.setCheckpointDir``) instead of ``localCheckpoint()``: blocks
@@ -707,6 +798,8 @@ def dedup_clusters(
     where every member pairs directly with its component's minimum
     key. A negative ``max_iter`` is a ``ValueError``.
     """
+    from pyspark.sql import Observation
+
     if max_iter < 0:
         raise ValueError(f"max_iter must be >= 0, got {max_iter}")
     if reliable:
@@ -716,28 +809,8 @@ def dedup_clusters(
     else:
         ckpt = lambda d: d.localCheckpoint()  # noqa: E731
         free = _free_local_blocks
-    edges = (
-        pairs.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    # symmetric adjacency
-    adj = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).cache()
-    # round 1 folded into initialization: from the identity init
-    # (label = node) the first propagation round computes exactly
-    # min(u, min_{v∈N(u)} v), and the single shuffle that used to
-    # build the distinct node set (a groupBy in disguise) can carry
-    # that aggregate directly — every invocation saves one full
-    # join-over-the-edge-list round (r6, guide §1.2: remove a pass).
-    # Same fixed point, identical final labels; the loop just starts
-    # one round further in.
-    labels = ckpt(
-        adj.groupBy("u")
-        .agg(F.least(F.col("u"), F.min("v")).alias("label"))
-        .select(F.col("u").alias("node"), "label")
-    )
+    adj = _adjacency(pairs).cache()
+    labels = ckpt(_initial_labels(adj))
     # the frame whose checkpoint BLOCKS back the current `labels`
     # (labels itself becomes a projection over it from round 1 on —
     # free() must target the LogicalRDD holder, not the projection)
@@ -763,7 +836,9 @@ def dedup_clusters(
         # eager localCheckpoint: materializes THIS round and replaces
         # the lineage with the stored blocks — every round starts from
         # a flat LogicalRDD scan (tests/test_dataset.py asserts the
-        # returned plan is join-free)
+        # returned plan is join-free). The same job counts the changed
+        # labels (observe): convergence costs no job of its own.
+        changed = Observation()
         new_full = ckpt(
             labels.select("node", "label", F.lit(True).alias("_own"))
             .unionAll(msgs)
@@ -772,14 +847,12 @@ def dedup_clusters(
                 F.min("label").alias("label"),
                 F.max(F.when(F.col("_own"), F.col("label"))).alias("_old"),
             )
-        )
-        changed = (
-            new_full.filter(F.col("label") != F.col("_old")).limit(1).count()
+            .observe(changed, F.count_if(F.col("label") != F.col("_old")).alias("n"))
         )
         free(labels_store)  # superseded round's blocks — release now
         labels_store = new_full
         labels = new_full.select("node", "label")
-        if changed == 0:
+        if changed.get["n"] == 0:
             break
 
     adj.unpersist()
@@ -1617,14 +1690,10 @@ def minhash_index_bands(
     from pyspark.sql import Window
 
     rows_per_band = n_hashes // n_bands
-    sets_ = hashed_shingle_frame(df, text_col, key_col, k=k)
-    sig = sets_.filter(F.size("sh") > 0).select(
+    signed = signed_shingle_frame(df, text_col, key_col, k=k, n_hashes=n_hashes)
+    exploded = signed.select(
         "k",
         F.size("sh").cast("long").alias("n"),
-        minhash_sig_from_hashes_udf(n_hashes)(F.col("sh")).alias("sig"),
-    )
-    exploded = sig.select(
-        "k", "n",
         F.posexplode(
             band_signatures(F.col("sig"), n_bands, rows_per_band)
         ).alias("band", "bsig"),
@@ -1659,8 +1728,9 @@ def incremental_minhash_neardup(
 
     Scale shape (index = 10^12 rows, batch = one crawl, batch ≪ index):
 
-    - the batch is staged ONCE (persisted hashed shingles feed both the
-      signature/banding pass and the verify join — the single-scan rule);
+    - the batch is staged ONCE (persisted shingle hashes and signatures,
+      one Arrow pass, feed both the banding pass and the verify join —
+      the single-scan rule);
     - the index side never shuffles: batch band keys are **broadcast**
       into a map-side join over the stored band table, and hot buckets
       are dropped by the precomputed ``bucket_n`` (map-side filter, no
@@ -1681,17 +1751,12 @@ def incremental_minhash_neardup(
     from pyspark.storagelevel import StorageLevel
 
     rows_per_band = n_hashes // n_bands
-    bstaged = hashed_shingle_frame(batch, text_col, key_col, k=k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    bsig = bstaged.filter(F.size("sh") > 0).select(
-        "k",
-        F.size("sh").cast("long").alias("n"),
-        minhash_sig_from_hashes_udf(n_hashes)(F.col("sh")).alias("sig"),
-    )
-    bexp = bsig.select(
+    bstaged = signed_shingle_frame(
+        batch, text_col, key_col, k=k, n_hashes=n_hashes
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    bexp = bstaged.select(
         F.col("k").alias("bk"),
-        F.col("n").alias("bn"),
+        F.size("sh").cast("long").alias("bn"),
         F.posexplode(
             band_signatures(F.col("sig"), n_bands, rows_per_band)
         ).alias("band", "bsig"),

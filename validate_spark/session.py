@@ -92,7 +92,18 @@ def get_spark(
     into validate_spark internals rather than user code anyway. PySpark
     reads the setting once per process, from the first session that
     makes a wrapped call; ``extra_conf`` can still set it back to
-    ``"true"`` for debugging."""
+    ``"true"`` for debugging.
+
+    The generated-class cache holds 1000 entries
+    (``spark.sql.codegen.cache.maxEntries``, default 100, a static conf
+    fixed at JVM start). One near-dup dedup op compiles 95-103 classes
+    on its first run (UDF stage, band hashing, two-phase bucket
+    aggregates, verify joins, propagation rounds), so at 100 entries
+    every later op evicted classes the next op needed and recompiled
+    41-61 of them (0.8 s of Janino per op). At 200 entries none
+    was recompiled; 1000 leaves room for a process that runs several
+    operators. Entries are keyed by generated source, so the cap only
+    bounds memory."""
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
@@ -111,6 +122,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
