@@ -28,11 +28,26 @@ from validate_spark.operators import similarity as sim
 from validate_spark.operators import textstats as ts
 from validate_spark.operators import multimodal as mm
 from validate_spark.sources.synth import synth_documents, synth_media_catalog
-from validate_spark.session import fan_out as _fan
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _fan(df: DataFrame) -> DataFrame:
+    """Spread a fixture frame over ``defaultParallelism`` partitions.
+
+    Every fixture parquet file holds ONE row group, so its scan is one
+    task, and per-row work above it (regex ladders, rule projections,
+    Arrow UDFs, HOF folds) would run on one core — measured 12.5 s →
+    1.2 s for the repetition annotator at 600k docs, and minhash
+    signatures at 2 of 32 cores. Library operators take their input's
+    layout as given; the builders here, which know the fixtures, wrap
+    the input of every per-row-heavy operator in this round-robin
+    repartition. Deterministic filters and column pruning still push
+    below it; computed projections stay above it and run after the
+    Exchange."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _lit_df(spark: SparkSession, rows: list, schema) -> DataFrame:
@@ -130,24 +145,31 @@ def _write_chunks(chunks: dict[str, list[DataFrame]]) -> None:
 
 
 def _streaming_fixture(fn):
-    """Run a Structured Streaming FIXTURE query under 4 shuffle
-    partitions (session.low_shuffle): stateful streaming wall time on a
-    kilobyte fixture is ~95% empty state-store setup/commit — one store
-    per shuffle partition per micro-batch per stateful operator side.
-    Output values are partition-count independent (deterministic
-    aggregations/joins); only the harness overhead drops. The stream
-    runs to completion INSIDE the wrapped builder (availableNow +
-    memory/parquet sink), so restoring the conf afterwards never
-    re-plans a live query. Production sizing note in low_shuffle's
-    docstring."""
+    """Run a Structured Streaming FIXTURE query with
+    ``spark.sql.shuffle.partitions`` pinned to 4: stateful streaming
+    wall time on a kilobyte fixture is ~95% empty state-store
+    setup/commit — one store per shuffle partition per micro-batch per
+    stateful operator side (measured: q148's outer interval join,
+    63.9 s at 32 partitions → a few seconds at 4). Output values are
+    partition-count independent (deterministic aggregations/joins);
+    only the harness overhead drops. A streaming query fixes its
+    shuffle-partition count at first start (the checkpoint offset
+    log), and the stream runs to completion INSIDE the wrapped builder
+    (availableNow + memory/parquet sink), so restoring the conf
+    afterwards never re-plans a live query. At real scale the
+    shuffle-partition count should match cluster parallelism — keyed
+    state then shards across executors; see BENCH.md §4."""
     import functools
-
-    from validate_spark.session import low_shuffle
 
     @functools.wraps(fn)
     def wrapped(spark, sf_dir):
-        with low_shuffle(spark, 4):
+        key = "spark.sql.shuffle.partitions"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "4")
+        try:
             return fn(spark, sf_dir)
+        finally:
+            spark.conf.set(key, old)
 
     return wrapped
 
@@ -266,7 +288,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q01_verdicts_documents(spark, sf_dir):
-    docs = _fan(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     res = validate(docs, DOC_RULES, key_cols=["doc_id"])
     return (
         res.verdicts().groupBy("pass").agg(F.count(F.lit(1)).alias("n"))
@@ -284,7 +306,7 @@ def q02_violations_by_rule(spark, sf_dir):
 
 
 def q03_first_errors(spark, sf_dir):
-    docs = _fan(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     res = validate(docs, DOC_RULES, key_cols=["doc_id"])
     return res.first_errors().select("doc_id", "field", "validator")
 
@@ -365,7 +387,7 @@ def q11_drift_histograms(spark, sf_dir):
 
 def q12_text_annotate(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    return ts.annotate(docs).select(
+    return ts.annotate(_fan(docs)).select(
         "doc_id", "lang_pred", "n_tokens_ws", "n_tokens_bpe", "quality", "fp"
     )
 
@@ -410,7 +432,7 @@ def q15_exact_dedup(spark, sf_dir):
 
 
 def q16_minhash_lsh_dedup(spark, sf_dir):
-    pairs = dd.minhash_dedup_pairs(_doubled_docs(spark, sf_dir), threshold=0.99)
+    pairs = dd.minhash_dedup_pairs(_fan(_doubled_docs(spark, sf_dir)), threshold=0.99)
     return pairs.select("a", "b")
 
 
@@ -420,9 +442,9 @@ def q17_simhash_dedup(spark, sf_dir):
     recomputes every signature and enumerates ALL equal pairs
     exhaustively — proving the bucketed pair generation has full recall
     at hamming 0 (incl. genuine signature collisions)."""
-    return dd.simhash_candidates(_doubled_docs(spark, sf_dir), max_hamming=0).select(
-        "a", "b"
-    )
+    return dd.simhash_candidates(
+        _fan(_doubled_docs(spark, sf_dir)), max_hamming=0
+    ).select("a", "b")
 
 
 def q44_ngram_jaccard(spark, sf_dir):
@@ -431,7 +453,7 @@ def q44_ngram_jaccard(spark, sf_dir):
     exhaustive O(n²) exact-Jaccard oracle, proving full prefix-filter
     recall at the threshold."""
     pairs = dd.ngram_jaccard_pairs(
-        _doubled_docs(spark, sf_dir), n=3, threshold=0.9
+        _fan(_doubled_docs(spark, sf_dir)), n=3, threshold=0.9
     )
     return pairs.select("a", "b", "jaccard")
 
@@ -529,7 +551,7 @@ def q22_media_features(spark, sf_dir):
     reproduces every feature value — what this checks end-to-end is the
     mapInPandas plumbing (Arrow batches, output schema, batch shape)."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    feats = mm.extract_media_features(mm.attach_fake_media(docs))
+    feats = mm.extract_media_features(_fan(mm.attach_fake_media(docs)))
     return feats.select(
         "doc_id",
         "mime",
@@ -599,7 +621,7 @@ def q23_spans_validation(spark, sf_dir):
 def q26_dedup_clusters(spark, sf_dir):
     """Near-dup pairs → connected components (min-label propagation):
     the cluster assignment a dedup pipeline actually consumes."""
-    pairs = dd.minhash_dedup_pairs(_doubled_docs(spark, sf_dir), threshold=0.99)
+    pairs = dd.minhash_dedup_pairs(_fan(_doubled_docs(spark, sf_dir)), threshold=0.99)
     return dd.dedup_clusters(pairs)
 
 
@@ -651,7 +673,7 @@ def q46_default_substitution(spark, sf_dir):
 def q29_required_family(spark, sf_dir):
     """Cross-field presence family (requiredIf / requiredWith) over
     derived nullable columns + default substitution."""
-    ev = _fan(_t(spark, sf_dir, "events"))
+    ev = _t(spark, sf_dir, "events")
     derived = ev.select(
         "event_id",
         "event_type",
@@ -930,7 +952,7 @@ def q49_decontamination(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 37 == 0).select("doc_id", "text")
-    return contamination_report(docs, bench, n=3, threshold=0.5)
+    return contamination_report(_fan(docs), _fan(bench), n=3, threshold=0.5)
 
 
 def q50_pii_scrub(spark, sf_dir):
@@ -1016,7 +1038,7 @@ def q53_repetition_signals(spark, sf_dir):
     from validate_spark.operators.textstats import annotate_repetition
 
     docs = _t(spark, sf_dir, "documents")
-    ann = annotate_repetition(docs)
+    ann = annotate_repetition(_fan(docs))
     return ann.select(
         "doc_id",
         "n_tokens",
@@ -1034,7 +1056,7 @@ def q54_dedup_retained(spark, sf_dir):
     all singletons. The oracle replays the q26 recursive transitive
     closure and subtracts the non-canonical members."""
     corpus = _doubled_docs(spark, sf_dir)
-    pairs = dd.minhash_dedup_pairs(corpus, threshold=0.99)
+    pairs = dd.minhash_dedup_pairs(_fan(corpus), threshold=0.99)
     kept = dd.dedup_retain(corpus, dd.dedup_clusters(pairs))
     return kept.select(F.col("doc_id").cast("string").alias("doc_id"))
 
@@ -1598,7 +1620,7 @@ def q64_custom_type_extractor(spark, sf_dir):
 
     from validate_spark.functions import validators as V
 
-    ev = _fan(_t(spark, sf_dir, "events"))
+    ev = _t(spark, sf_dir, "events")
     i = F.col("event_id")
     money = F.struct(
         F.col("value").alias("amount"),
@@ -1668,7 +1690,7 @@ def q66_url_blocklist(spark, sf_dir):
         [("spam.example.com",), ("tracker.example.org",), ("unused.example.io",)],
         "domain string",
     )
-    out = blocked_url_docs(corpus, bl)
+    out = blocked_url_docs(_fan(corpus), bl)
     return out.select(F.col("k").alias("doc_id"), "hits", "n_hits")
 
 
@@ -1702,9 +1724,9 @@ def q68_unigram_quality(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     vocab = build_background_vocab(
-        docs.filter(F.col("doc_id") % 2 == 0), min_count=3
+        _fan(docs.filter(F.col("doc_id") % 2 == 0)), min_count=3
     )
-    out = unigram_logprob_scores(docs, vocab)
+    out = unigram_logprob_scores(_fan(docs), vocab)
     return out.select(
         F.col("k").alias("doc_id"), "n_tok", "oov_rate", "mean_logp"
     )
@@ -1731,7 +1753,7 @@ def q69_line_dedup(spark, sf_dir):
         F.when(i % 7 == 0, F.lit("Cookie policy: we use cookies on this site.")),
     )
     corpus = docs.select("doc_id", t2.alias("text"))
-    return line_dedup(corpus, min_docs=10, min_chars=10)
+    return line_dedup(_fan(corpus), min_docs=10, min_chars=10)
 
 
 def q70_type_gauntlet(spark, sf_dir):
@@ -1826,7 +1848,7 @@ def q72_semantic_decontam(spark, sf_dir):
         F.col("vec_id").alias("bid"), F.col("embedding").alias("bv")
     )
     rep = semantic_contamination(
-        emb, bench, threshold=0.99, bench_vec_col="bv", bench_key_col="bid"
+        _fan(emb), bench, threshold=0.99, bench_vec_col="bv", bench_key_col="bid"
     )
     return rep.select(
         F.col("k").alias("vec_id"), "max_cos", "n_hits", "contaminated"
@@ -1901,7 +1923,7 @@ def q75_duplicated_spans(spark, sf_dir):
         ).otherwise(F.lit("")),
     )
     corpus = docs.select("doc_id", t2.alias("text"))
-    out = duplicated_spans(corpus, w=8, min_docs=2)
+    out = duplicated_spans(_fan(corpus), w=8, min_docs=2)
     return out.select(
         F.col("k").cast("long").alias("doc_id"),
         "n_tok",
@@ -1947,8 +1969,8 @@ def q77_incremental_minhash(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    ib = minhash_index_bands(docs)
-    iss = hashed_shingle_frame(docs)
+    ib = minhash_index_bands(_fan(docs))
+    iss = hashed_shingle_frame(_fan(docs))
     i = F.col("doc_id")
     batch = docs.filter(i % 25 < 3).select(
         (i + 100000).alias("doc_id"),
@@ -1963,7 +1985,7 @@ def q77_incremental_minhash(spark, sf_dir):
         .otherwise(F.concat(F.lit("novel batch content "), i.cast("string")))
         .alias("text"),
     )
-    out = incremental_minhash_neardup(batch, ib, iss, threshold=0.99)
+    out = incremental_minhash_neardup(_fan(batch), ib, iss, threshold=0.99)
     return out.select(
         F.col("k").cast("long").alias("doc_id"),
         F.col("index_key").cast("long").alias("index_key"),
@@ -1980,7 +2002,7 @@ def q78_quality_quantile(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     kept = quality_quantile_filter(
-        docs, "lang", ts.quality_score(F.col("text")), 3, 10, "doc_id"
+        _fan(docs), "lang", ts.quality_score(F.col("text")), 3, 10, "doc_id"
     )
     return kept.select("doc_id", "lang", "q_rank", "q_n")
 
@@ -1994,7 +2016,7 @@ def q79_stratum_quota(spark, sf_dir):
     from validate_spark.operators.sampling import stratum_quota
 
     docs = _t(spark, sf_dir, "documents")
-    return stratum_quota(docs, "source", 7, "doc_id").select(
+    return stratum_quota(_fan(docs), "source", 7, "doc_id").select(
         "doc_id", "source", "quota_rank"
     )
 
@@ -2008,7 +2030,7 @@ def q80_centroid_outliers(spark, sf_dir):
     from validate_spark.operators.similarity import label_centroid_outliers
 
     emb = _t(spark, sf_dir, "embeddings")
-    return label_centroid_outliers(emb, dist_threshold=1.0)
+    return label_centroid_outliers(_fan(emb), dist_threshold=1.0)
 
 
 def q81_source_overlap(spark, sf_dir):
@@ -2024,7 +2046,7 @@ def q81_source_overlap(spark, sf_dir):
     ~4x (measured 25.2->6.0 s at sf0.1, byte-identical output)."""
     docs = _t(spark, sf_dir, "documents")
     return dd.source_overlap_matrix(
-        docs, "source", threshold=0.7, n_hashes=24, n_bands=8
+        _fan(docs), "source", threshold=0.7, n_hashes=24, n_bands=8
     )
 
 
@@ -2053,7 +2075,7 @@ def q83_cluster_split(spark, sf_dir):
     near-duplicates never straddle train and eval."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dd.minhash_dedup_pairs(
-        docs, threshold=0.9, n_hashes=24, n_bands=8
+        _fan(docs), threshold=0.9, n_hashes=24, n_bands=8
     )
     clusters = dd.dedup_clusters(pairs)
     return dd.cluster_split(
@@ -2084,7 +2106,7 @@ def q84_top_spans(spark, sf_dir):
         ).otherwise(F.lit("")),
     )
     corpus = docs.select("doc_id", t2.alias("text"))
-    return top_duplicated_spans(corpus, w=8, min_docs=2, top_n=20)
+    return top_duplicated_spans(_fan(corpus), w=8, min_docs=2, top_n=20)
 
 
 def q85_rule_drift(spark, sf_dir):
@@ -2172,8 +2194,8 @@ def q88_pattern_profile(spark, sf_dir):
     both engines; the classification regexes are the Java-RE2 common
     dialect and the priority ORDER is part of the contract (an
     all-digit md5 fragment is int_string, not hex, in both engines).
-    One scan, regex ladder in one codegen'd projection (fan_out
-    guarded), groupBy over <=11 labels, total via window over the
+    One scan spread by ``_fan``, regex ladder in one codegen'd
+    projection, groupBy over <=11 labels, total via window over the
     aggregated frame."""
     from validate_spark.operators.suggest import pattern_profile
 
@@ -2217,7 +2239,7 @@ def q88_pattern_profile(spark, sf_dir):
         .when(sub == 1, F.substring(m, 1, 12))
         .otherwise(F.concat(F.lit("plain text "), ds))
     )
-    return pattern_profile(docs.select(val.alias("val")), "val")
+    return pattern_profile(_fan(docs.select(val.alias("val"))), "val")
 
 
 @_streaming_fixture
@@ -2318,7 +2340,7 @@ def q90_encoding_signals(spark, sf_dir):
     mojibake, FFFD, BEL) with a pinned first-match CASE order; the
     oracle replays the seeding via chr() codepoints and the SAME
     \\x{..}-class regexes interpolated from the module. One codegen'd
-    projection, fan_out-guarded, no shuffle."""
+    projection over the ``_fan``-spread scan, no other shuffle."""
     from validate_spark.operators.textstats import encoding_signals
 
     docs = _t(spark, sf_dir, "documents")
@@ -2347,7 +2369,7 @@ def q90_encoding_signals(spark, sf_dir):
         .otherwise(t)
     )
     seeded = docs.select(F.col("doc_id"), val.alias("text"))
-    return encoding_signals(seeded, "text").select(
+    return encoding_signals(_fan(seeded), "text").select(
         "doc_id",
         F.col("n_mojibake").cast("long").alias("n_mojibake"),
         F.col("n_replacement").cast("long").alias("n_replacement"),
@@ -2582,7 +2604,7 @@ def q99_c4_signals(spark, sf_dir):
         .otherwise(t)
     )
     seeded = docs.select("doc_id", val.alias("text"))
-    return c4_signals(seeded, "text").select(
+    return c4_signals(_fan(seeded), "text").select(
         "doc_id",
         "has_curly",
         "has_lorem",
@@ -2626,7 +2648,7 @@ def q100_gopher_rules(spark, sf_dir):
         .otherwise(t)
     )
     seeded = docs.select("doc_id", val.alias("text"))
-    out = gopher_rules(seeded, "text")
+    out = gopher_rules(_fan(seeded), "text")
     return out.select(
         "doc_id",
         "n_words",
@@ -3123,7 +3145,7 @@ def q110_distinctive_terms(spark, sf_dir):
     from validate_spark.operators.textstats import distinctive_terms
 
     docs = _t(spark, sf_dir, "documents")
-    return distinctive_terms(docs, "doc_id", "text", top_k=3)
+    return distinctive_terms(_fan(docs), "doc_id", "text", top_k=3)
 
 
 def q111_hopping_windows(spark, sf_dir):
@@ -3647,7 +3669,7 @@ def q130_quality_classifier(spark, sf_dir):
     from validate_spark.operators.textstats import quality_classifier
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return quality_classifier(docs).select(
+    return quality_classifier(_fan(docs)).select(
         "doc_id", "n_words", "n_stop", "n_punct", "n_digit", "n_upper",
         "score_e6", "model_score", "keep",
     )
@@ -3661,7 +3683,7 @@ def q131_doc_chunks(spark, sf_dir):
     from validate_spark.operators.packing import chunk_documents
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return chunk_documents(docs, chunk_tokens=64, stride=48)
+    return chunk_documents(_fan(docs), chunk_tokens=64, stride=48)
 
 
 def q132_doc_keywords(spark, sf_dir):
@@ -3673,7 +3695,7 @@ def q132_doc_keywords(spark, sf_dir):
     from validate_spark.operators.textstats import doc_keywords
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return doc_keywords(docs, k=3)
+    return doc_keywords(_fan(docs), k=3)
 
 
 def q133_csv_ingest(spark, sf_dir):
@@ -3854,7 +3876,7 @@ def q143_bpe_merges(spark, sf_dir):
     (count, lhs, rhs)."""
     from validate_spark.operators.textstats import bpe_merge_stats
 
-    return bpe_merge_stats(_t(spark, sf_dir, "documents"), k=50)
+    return bpe_merge_stats(_fan(_t(spark, sf_dir, "documents")), k=50)
 
 
 def q144_token_entropy(spark, sf_dir):
@@ -3865,7 +3887,7 @@ def q144_token_entropy(spark, sf_dir):
     cardinality is bounded (round-4 gotcha)."""
     from validate_spark.operators.textstats import token_entropy
 
-    return token_entropy(_t(spark, sf_dir, "documents"))
+    return token_entropy(_fan(_t(spark, sf_dir, "documents")))
 
 
 def q145_random_projection(spark, sf_dir):
@@ -3877,7 +3899,7 @@ def q145_random_projection(spark, sf_dir):
     projection fuses into the scan."""
     from validate_spark.operators.similarity import random_projection
 
-    return random_projection(_t(spark, sf_dir, "embeddings"))
+    return random_projection(_fan(_t(spark, sf_dir, "embeddings")))
 
 
 _CANARY_PHRASES = [
@@ -3898,7 +3920,7 @@ def q146_phrase_contamination(spark, sf_dir):
     from validate_spark.operators.decontam import phrase_contamination
 
     return phrase_contamination(
-        _t(spark, sf_dir, "documents"), _CANARY_PHRASES
+        _fan(_t(spark, sf_dir, "documents")), _CANARY_PHRASES
     )
 
 
@@ -4152,7 +4174,7 @@ def q152_nfc_normalization(spark, sf_dir):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    return nfc_report(salted)
+    return nfc_report(_fan(salted))
 
 
 def q153_table_checksum(spark, sf_dir):
@@ -4521,7 +4543,7 @@ def q165_pii_spans(spark, sf_dir):
                                    F.lit(" logged")))
         .otherwise(t)
     )
-    return pii_spans(docs.select("doc_id", salted.alias("text")))
+    return pii_spans(_fan(docs.select("doc_id", salted.alias("text"))))
 
 
 def q166_top_sources_with_ties(spark, sf_dir):
@@ -4761,7 +4783,7 @@ def q176_dsir_selection(spark, sf_dir):
     from validate_spark.operators.sampling import dsir_weights
 
     docs = _t(spark, sf_dir, "documents")
-    return dsir_weights(docs, F.col("lang") == "en")
+    return dsir_weights(_fan(docs), F.col("lang") == "en")
 
 
 def q177_bloom_decontamination(spark, sf_dir):
@@ -4776,7 +4798,7 @@ def q177_bloom_decontamination(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 37 == 0)
-    return bloom_contamination(docs, bench)
+    return bloom_contamination(_fan(docs), _fan(bench))
 
 
 def q178_global_row_index(spark, sf_dir):
@@ -5050,7 +5072,7 @@ def q192_bm25_topk(spark, sf_dir):
         ],
         ["query_id", "term"],
     )
-    return bm25_topk(docs, q, k=8)
+    return bm25_topk(_fan(docs), q, k=8)
 
 
 def q193_theil_sen_trend(spark, sf_dir):
@@ -5167,7 +5189,7 @@ def q198_kwic_snippets(spark, sf_dir):
     q = _lit_df(
         spark, [("q1", "hash"), ("q2", "vector")], ["query_id", "term"]
     )
-    return kwic_snippets(docs, q, window=24)
+    return kwic_snippets(_fan(docs), q, window=24)
 
 
 def q199_weighted_reservoir(spark, sf_dir):
@@ -5472,8 +5494,8 @@ def q209_dedup_recall_report(spark, sf_dir):
     )
 
     docs = _doubled_docs(spark, sf_dir)
-    cand = simhash_candidates(docs, max_hamming=3).select("a", "b")
-    truth = ngram_jaccard_pairs(docs, n=3, threshold=0.9).select("a", "b")
+    cand = simhash_candidates(_fan(docs), max_hamming=3).select("a", "b")
+    truth = ngram_jaccard_pairs(_fan(docs), n=3, threshold=0.9).select("a", "b")
     return dedup_recall_report(cand, truth)
 
 
@@ -5660,7 +5682,7 @@ def q216_collocations(spark, sf_dir):
     from validate_spark.operators.textstats import collocations
 
     return collocations(
-        _t(spark, sf_dir, "documents"), "text", min_count=3, top_n=100
+        _fan(_t(spark, sf_dir, "documents")), "text", min_count=3, top_n=100
     )
 
 
@@ -5681,7 +5703,7 @@ def q217_containment_quotes(spark, sf_dir):
         F.substring("text", 1, 200).alias("text"),
     )
     return containment_pairs(
-        docs.unionAll(quotes), threshold_pct=80, max_df=1000
+        _fan(docs.unionAll(quotes)), threshold_pct=80, max_df=1000
     )
 
 
@@ -5768,7 +5790,7 @@ def q219_pq_ann(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    return sim.pq_adc_topk(emb, q, cb, k=10)
+    return sim.pq_adc_topk(_fan(emb), q, cb, k=10)
 
 
 def q220_pq_recall(spark, sf_dir):
@@ -5788,7 +5810,7 @@ def q220_pq_recall(spark, sf_dir):
     )
     exact = sim.brute_force_topk(emb, q, k=10)
     cb = sim.pq_codebooks(emb, m=8, n_codes=16)
-    approx = sim.pq_adc_topk(emb, q, cb, k=10).select(
+    approx = sim.pq_adc_topk(_fan(emb), q, cb, k=10).select(
         "query_id", "neighbor_id", F.col("rank").alias("_pq_rank")
     )
     return (
@@ -5897,8 +5919,8 @@ def q223_oov_report(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    vocab = build_background_vocab(docs, min_count=5, max_vocab=100)
-    return oov_report(docs, vocab)
+    vocab = build_background_vocab(_fan(docs), min_count=5, max_vocab=100)
+    return oov_report(_fan(docs), vocab)
 
 
 def q224_scd2_build(spark, sf_dir):
@@ -6562,11 +6584,9 @@ def q245_typo_pairs(spark, sf_dir):
         normalize_text,
         typo_candidate_pairs,
     )
-    from validate_spark.session import fan_out
-
     docs = _t(spark, sf_dir, "documents")
     toks = (
-        fan_out(docs)
+        _fan(docs)
         .select(normalize_text(F.col("text")).alias("_t"))
         .filter(F.length("_t") > 0)
         .select(F.explode(F.split("_t", " ")).alias("_w"))
@@ -6584,7 +6604,7 @@ def q245_typo_pairs(spark, sf_dir):
     )
     corpus = docs.select("text").unionByName(planted)
     return typo_candidate_pairs(
-        corpus, "text", min_len=4, max_len=12, min_support=1
+        _fan(corpus), "text", min_len=4, max_len=12, min_support=1
     )
 
 
@@ -6608,7 +6628,7 @@ def q234_ivf_pq(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    return sim.ivf_pq_topk(emb, q, cents, cb, k=10, nprobe=2)
+    return sim.ivf_pq_topk(_fan(emb), q, cents, cb, k=10, nprobe=2)
 
 
 def q235_spatial_grid_join(spark, sf_dir):
@@ -6801,7 +6821,7 @@ def q249_hybrid_rrf(spark, sf_dir):
         ],
         ["query_id", "term"],
     )
-    lex = bm25_topk(docs, terms, k=8).select("query_id", "doc_id", "rank")
+    lex = bm25_topk(_fan(docs), terms, k=8).select("query_id", "doc_id", "rank")
     qv = emb.filter(F.col("vec_id").isin(1, 2)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
@@ -8389,7 +8409,7 @@ def oracle_sql() -> dict[str, str]:
             ), u AS (
               SELECT doc_id,
                      unnest(regexp_extract_all(coalesce(text,''),
-                                               'https?://[^/\s]+')) AS url
+                                               'https?://[^/\\s]+')) AS url
               FROM d
             ), doms AS (
               SELECT DISTINCT doc_id,
@@ -10952,7 +10972,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, i::int AS idx, kind,
                    strlen(t)::int AS n_chars,
                    (CASE WHEN trim(t) = '' THEN 0
-                         ELSE len(regexp_split_to_array(trim(t), '\s+'))
+                         ELSE len(regexp_split_to_array(trim(t), '\\s+'))
                     END)::int AS n_tokens,
                    (kind <> 'text') AS has_ref
             FROM base

@@ -428,8 +428,7 @@ def test_contamination_broadcasts_benchmark(spark):
     assert "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan
     # corpus side: scan → gram build → row-local intersect, shuffle-free
-    # (the only exchanges belong to the bench-side distinct/aggregate
-    # and the fan_out of the under-partitioned fixture scan)
+    # (the only exchanges belong to the bench-side distinct/aggregate)
     assert "hashpartitioning(k" not in plan
 
 
@@ -1550,8 +1549,9 @@ def test_doc_keywords_integer_rank(spark):
     assert got[(2, 2)] == ("plum", 1, 1)
     assert not [k for k in got if k[0] == 3]
     # one corpus scan, no join: df is a count window on the tf frame
-    # (a groupBy+self-join branch re-scans — fan_out's round-robin
-    # blocks exchange reuse; measured 2 scans/5 exchanges)
+    # (a groupBy+self-join branch re-scans — over a round-robin
+    # repartitioned input Catalyst does not reuse the exchange;
+    # measured 2 scans/5 exchanges)
     plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert "Join" not in final
@@ -1598,8 +1598,7 @@ def test_random_projection_filters_ragged(spark):
     out = sim.random_projection(df)
     assert sorted({r["key"] for r in out.collect()}) == [1]
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # the only allowed exchange is fan_out's round-robin guard on an
-    # under-partitioned input; no hash/range shuffle, no join
+    # map-only: no hash/range shuffle, no join
     assert "hashpartitioning" not in plan and "Join" not in plan
 
 

@@ -721,3 +721,68 @@ def test_typo_pairs_join_is_variant_equi_never_cartesian(spark):
     plan = physical(typo_candidate_pairs(docs, "text", min_support=2))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["gopher_rules", "ngram_jaccard_pairs", "random_projection", "blocked_url_docs"],
+)
+def test_operators_never_repartition_for_input_layout(spark, op):
+    """Library operators take the input's layout as given: on the
+    one-partition sf0.001 scan (every fixture file is one row group)
+    the plan holds no round-robin repartition. Spreading a fixture is
+    the query builder's job (``__spark_entry__._fan``)."""
+    from validate_spark.operators import dedup as dd
+    from validate_spark.operators import similarity as sim
+    from validate_spark.operators import textstats as ts
+    from validate_spark.operators.decontam import blocked_url_docs
+
+    docs = spark.read.parquet(DOCS)
+    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    build = {
+        "gopher_rules": lambda: ts.gopher_rules(docs),
+        "ngram_jaccard_pairs": lambda: dd.ngram_jaccard_pairs(docs, threshold=0.9),
+        "random_projection": lambda: sim.random_projection(spark.read.parquet(EMB)),
+        "blocked_url_docs": lambda: blocked_url_docs(
+            docs, spark.createDataFrame([("spam.example.com",)], "domain string")
+        ),
+    }[op]
+    assert "RoundRobinPartitioning" not in physical(build())
+
+
+@pytest.mark.parametrize("name", ["q24_events_kitchen_sink", "q44_ngram_jaccard"])
+def test_fixture_builders_spread_the_scan(spark, name):
+    """The builders that feed per-row-heavy work spread the
+    one-row-group fixture scan themselves: a validation cell (q24) and
+    a formerly guarded operator's cell (q44) each plan one round-robin
+    Exchange at sf0.001."""
+    import __spark_entry__ as em
+
+    plan = physical(em.queries()[name](spark, "/root/testdata/sf0.001"))
+    assert plan.count("RoundRobinPartitioning") >= 1
+
+
+def test_typo_pairs_builds_without_jobs_on_aggregated_input(spark):
+    """Building typo_candidate_pairs over an aggregated (post-shuffle)
+    frame launches no Spark job: the operator never asks its input for
+    a partition count, which on a post-shuffle frame runs the shuffle
+    stages under AQE."""
+    import uuid
+
+    from validate_spark.operators.textstats import typo_candidate_pairs
+
+    words = (
+        spark.read.parquet(DOCS)
+        .select(F.explode(F.split("text", " ")).alias("text"))
+        .groupBy("text")
+        .count()
+        .select("text")
+    )
+    sc = spark.sparkContext
+    group = f"typo_build_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        typo_candidate_pairs(words, "text", min_support=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -33,11 +33,6 @@ decorators such as ``validators._v``) run before the hook is installed
 and read ``none``. ``unreached_unreferenced`` therefore lists candidates
 to check, not deletions: registered validators and filters land in it
 when no query uses them, though the rule DSL reaches them by name.
-
-``session.fan_out`` is wrapped for the whole run: each call site's
-calls, the Spark jobs launched inside the call (the partition count of
-a post-shuffle frame executes its shuffle stages under AQE) and the
-time spent are stored under ``fan_out``.
 """
 
 from __future__ import annotations
@@ -189,42 +184,6 @@ class Tracer:
                 rec["returns"][frame.f_lineno] += 1
 
 
-class FanOutCounter:
-    """Wraps ``validate_spark.session.fan_out``, also where a module
-    already imported the name."""
-
-    def __init__(self):
-        import validate_spark.session as session
-
-        self.orig = session.fan_out
-        self.sites = defaultdict(lambda: {"calls": 0, "jobs": 0, "repartitioned": 0, "s": 0.0})
-        self.phase = "setup"
-        self.n = 0
-        for mod in list(sys.modules.values()):
-            for k, v in list(getattr(mod, "__dict__", {}).items()):
-                if v is self.orig:
-                    setattr(mod, k, self)
-
-    def __call__(self, df):
-        caller = sys._getframe(1)
-        site = self.sites[f"{_rel(caller.f_code.co_filename)}:{caller.f_lineno} {caller.f_code.co_name} [{self.phase}]"]
-        sc = df.sparkSession.sparkContext
-        self.n += 1
-        group = f"reach-fan-out-{self.n}"
-        prev = sc.getLocalProperty("spark.jobGroup.id")
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        t0 = time.perf_counter()
-        try:
-            out = self.orig(df)
-        finally:
-            site["s"] += time.perf_counter() - t0
-            sc.setLocalProperty("spark.jobGroup.id", prev)
-        site["calls"] += 1
-        site["jobs"] += len(sc.statusTracker().getJobIdsForGroup(group))
-        site["repartitioned"] += out is not df
-        return out
-
-
 def _drop_gateway() -> None:
     """End the JVM a finished script left running, so the next script
     launches its own as it does from the command line."""
@@ -265,7 +224,6 @@ def main() -> int:
     args = ap.parse_args()
 
     sys.path.insert(0, ROOT)
-    fan = FanOutCounter()
     funcs = functions()
     tr = Tracer(funcs)
     status = {}
@@ -273,7 +231,7 @@ def main() -> int:
     sys.setprofile(tr.hook)
     threading.setprofile(tr.hook)
     try:
-        tr.phase = fan.phase = "queries"
+        tr.phase = "queries"
         import __spark_entry__
         from validate_spark.session import get_spark
 
@@ -282,7 +240,7 @@ def main() -> int:
         status["check_oracle"] = _run_script(os.path.join(ROOT, "tools", "check_oracle.py"), [])
         _drop_gateway()
 
-        tr.phase = fan.phase = "perfbench"
+        tr.phase = "perfbench"
         sys.path.insert(0, os.path.join(ROOT, "perfbench"))
         for wl in WORKLOADS:
             status[f"perfbench:{wl}"] = _run_script(
@@ -344,7 +302,6 @@ def main() -> int:
             "unreached_unreferenced": len(candidates),
         },
         "unreached_unreferenced": candidates,
-        "fan_out": {k: {**v, "s": round(v["s"], 3)} for k, v in sorted(fan.sites.items())},
         "functions": out_funcs,
     }
     with open(args.out, "w") as fh:

@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from validate_spark.operators.dedup import cosine_sim, word_ngram_frame
-from validate_spark.session import fan_out
 
 
 def contamination_report(
@@ -128,12 +127,7 @@ def blocked_url_docs(
     |blocklist| per doc — shuffle into the per-doc rollup. A blocklist
     too big to broadcast: ``broadcast_blocklist=False`` → shuffle join
     (refcheck's large-catalog rule), same semantics."""
-    from validate_spark.session import fan_out
-
-    # fan_out: the regexp_extract_all URL scan is per-row-heavy — on a
-    # 1-partition parquet source it would run on one core (the repo's
-    # recorded gotcha; 4th occurrence caught by q66's bench cell)
-    doms = fan_out(corpus).select(
+    doms = corpus.select(
         F.col(key_col).cast("string").alias("k"),
         F.explode(extract_domains(text_col)).alias("dom"),
     )
@@ -184,8 +178,7 @@ def semantic_contamination(
     output row. Cost is O(|corpus| x |bench| x dim) multiply-adds —
     the exact semantics of the screen; a benchmark too large for that
     product belongs in ``embedding_neardup_lsh``-style bucketing, not
-    here. Per-row work is HOF-heavy → ``fan_out`` guards
-    under-partitioned inputs (the repo's 1-partition-parquet gotcha).
+    here.
 
     Cross-engine determinism: cosines are rounded to 6 before the max /
     threshold compare, and the fold is the NULL-propagating sequential
@@ -205,9 +198,7 @@ def semantic_contamination(
             ).alias("_bvs")
         )
     )
-    c = fan_out(
-        corpus_emb.select(F.col(key_col).alias("k"), F.col(vec_col).alias("cv"))
-    )
+    c = corpus_emb.select(F.col(key_col).alias("k"), F.col(vec_col).alias("cv"))
     scores = F.transform(
         F.col("_bvs"), lambda s: F.round(cosine_sim(F.col("cv"), s["bv"]), 6)
     )
@@ -256,7 +247,7 @@ def phrase_contamination(
             for p in phrases
         ]
     )
-    hits = fan_out(corpus).select(F.explode(probes).alias("p")).select(
+    hits = corpus.select(F.explode(probes).alias("p")).select(
         F.col("p.phrase").alias("phrase"), F.col("p.hit").alias("hit")
     )
     return hits.groupBy("phrase").agg(

@@ -42,9 +42,6 @@ from pyspark.sql import types as T
 from validate_spark.operators.textstats import fingerprint, normalize_text
 
 
-from validate_spark.session import fan_out as _fan_out
-
-
 def _two_phase_buckets(
     df: DataFrame,
     group_cols: list[str],
@@ -312,7 +309,7 @@ def _normalized_frame(df: DataFrame, text_col: str, key_col: str) -> DataFrame:
     ``filter(size(sh) > 0)`` would be pushed below the projection and
     re-run the normalization per element (measured 5 s → 35 s on 1k
     docs). So ``sh`` is never empty downstream."""
-    return _fan_out(df).select(
+    return df.select(
         F.col(key_col).cast("string").alias("k"),
         normalize_text(F.col(text_col)).alias("_t"),
     ).filter(F.length("_t") > 0)
@@ -533,12 +530,8 @@ def word_ngram_frame(
     """(k, grams: array<string>) — DISTINCT word n-grams of the
     normalized text; docs shorter than n tokens contribute their whole
     token sequence as the single gram (short exact dups still match).
-    Normalization staged in its own projection (the
-    hashed_shingle_frame PERF note applies verbatim)."""
-    normed = _fan_out(df).select(
-        F.col(key_col).cast("string").alias("k"),
-        normalize_text(F.col(text_col)).alias("_t"),
-    ).filter(F.length("_t") > 0)
+    Normalization staged in its own projection (``_normalized_frame``)."""
+    normed = _normalized_frame(df, text_col, key_col)
     toks = normed.select("k", F.split("_t", " ").alias("_w"))
     w = F.col("_w")
     grams = F.array_distinct(
@@ -907,7 +900,7 @@ def simhash_candidates(
     within Hamming distance 3 must agree exactly on ≥1 chunk
     (pigeonhole over 4 chunks), so per-chunk buckets have full recall.
     """
-    sigs = _fan_out(df).select(
+    sigs = df.select(
         F.col(key_col).cast("string").alias("k"), simhash_column(text_col).alias("sig")
     )
     chunks = sigs.select(
@@ -1428,8 +1421,7 @@ def line_dedup(
     k, t = F.col(key_col), F.coalesce(F.col(text_col), F.lit(""))
 
     lines = (
-        _fan_out(df)
-        .select(k.alias("k"), F.posexplode(F.split(t, "\n")).alias("pos", "line"))
+        df.select(k.alias("k"), F.posexplode(F.split(t, "\n")).alias("pos", "line"))
         .withColumn("_t", F.trim(F.col("line")))
         .withColumn("cand", F.length("_t") >= min_chars)
         .withColumn("lk", F.md5(F.col("_t")))
@@ -1563,11 +1555,10 @@ def duplicated_spans(
     Scale shape (corpus = 10^12 docs):
 
     - window building is a map-side projection (split + transform +
-      md5 over slices — regex/hash heavy → ``fan_out`` guard); the
-      marked frame is **persisted** (MEMORY_AND_DISK) because two
-      rollups consume it — without the persist each branch would
-      re-tokenize and re-hash the full corpus (the round-4
-      persisted-frame-sharing rule);
+      md5 over slices); the marked frame is **persisted**
+      (MEMORY_AND_DISK) because two rollups consume it — without the
+      persist each branch would re-tokenize and re-hash the full
+      corpus (the round-4 persisted-frame-sharing rule);
     - doc frequency is a distinct (wh, k) + count — both shuffles key
       on the uniform md5 window hash, explicitly ``repartition(wh)``
       co-partitioned with the mark join so frequency agg + join share
@@ -1587,12 +1578,10 @@ def duplicated_spans(
     if w < 1:
         raise ValueError("w must be >= 1")
     n = df.sparkSession.sparkContext.defaultParallelism
-    toks = _fan_out(
-        df.select(
-            F.col(key_col).cast("string").alias("k"),
-            F.split(normalize_text(F.col(text_col)), " ").alias("_w"),
-        ).filter(F.length(F.concat_ws("", "_w")) > 0)
-    )
+    toks = df.select(
+        F.col(key_col).cast("string").alias("k"),
+        F.split(normalize_text(F.col(text_col)), " ").alias("_w"),
+    ).filter(F.length(F.concat_ws("", "_w")) > 0)
     tw = F.col("_w")
     base = toks.select(
         "k",
@@ -1975,10 +1964,10 @@ def top_duplicated_spans(
 
     Scale shape:
 
-    - window building is the same map-side split + slice projection
-      (``fan_out`` guard); exchanges key on ``md5(span)`` (16-byte
-      uniform keys), the span string rides along (min-per-group — the
-      hash is injective modulo md5 collision);
+    - window building is the same map-side split + slice projection;
+      exchanges key on ``md5(span)`` (16-byte uniform keys), the span
+      string rides along (min-per-group — the hash is injective
+      modulo md5 collision);
     - the doc-frequency aggregate is TWO distinct-free stages —
       (wh, k) then (wh) — never a ``countDistinct`` beside a plain
       count (that re-plans the groupBy as a two-phase Expand, the
@@ -1994,12 +1983,10 @@ def top_duplicated_spans(
         raise ValueError("w and top_n must be >= 1")
     from pyspark.sql import Window
 
-    toks = _fan_out(
-        df.select(
-            F.col(key_col).cast("string").alias("k"),
-            F.split(normalize_text(F.col(text_col)), " ").alias("_w"),
-        ).filter(F.length(F.concat_ws("", "_w")) > 0)
-    )
+    toks = df.select(
+        F.col(key_col).cast("string").alias("k"),
+        F.split(normalize_text(F.col(text_col)), " ").alias("_w"),
+    ).filter(F.length(F.concat_ws("", "_w")) > 0)
     tw = F.col("_w")
     base = toks.select(
         "k", F.greatest(F.size(tw) - (w - 1), F.lit(0)).alias("n_windows"), tw.alias("_w")

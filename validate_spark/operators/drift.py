@@ -142,9 +142,7 @@ def partition_quantile_sketches(df: DataFrame, col: str, *, n_quantiles: int = 6
                 {"n": [len(v)], "q": [np.quantile(v, probs).tolist()]}
             )
 
-    from validate_spark.session import fan_out
-
-    return fan_out(df.select(col)).mapInPandas(gen, SKETCH_SCHEMA)
+    return df.select(col).mapInPandas(gen, SKETCH_SCHEMA)
 
 
 def _sketch_cdf(sketches: list, grid) -> "list[float]":

@@ -164,9 +164,7 @@ def extract_media_features(
                 }
             )
 
-    from validate_spark.session import fan_out
-
-    return fan_out(df.select(F.col(key_col), F.col(data_col))).mapInPandas(
+    return df.select(F.col(key_col), F.col(data_col)).mapInPandas(
         gen, FEATURES_SCHEMA
     )
 

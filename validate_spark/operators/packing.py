@@ -119,15 +119,13 @@ def chunk_documents(
 
     Scale: map-only — normalize, split, explode a per-doc index
     sequence, slice. ZERO shuffles; the explode fan-out is ~n/stride
-    rows per doc on the same partition (fan_out-guarded against the
-    1-partition-scan gotcha). The guarded ``sequence()`` never sees a
-    negative length (the working-notes F.sequence gotcha).
+    rows per doc on the same partition. The guarded ``sequence()``
+    never sees a negative length (the working-notes F.sequence
+    gotcha).
 
     Reference seed: length family (SURVEY.md §2.4) lifted to window
     construction; cf. the standard fixed-window pretraining prep.
     """
-    from validate_spark.session import fan_out
-
     if chunk_tokens <= 0 or stride <= 0 or stride > chunk_tokens:
         raise ValueError("need 0 < stride <= chunk_tokens")
     L, S = int(chunk_tokens), int(stride)
@@ -136,8 +134,7 @@ def chunk_documents(
     norm = normalize_text(F.col(text_col))
     toks = F.filter(F.split(norm, " "), lambda x: x != "")
     base = (
-        fan_out(df)
-        .select(F.col(key_col).alias("key"), toks.alias("_tk"))
+        df.select(F.col(key_col).alias("key"), toks.alias("_tk"))
         .withColumn("_n", F.size("_tk").cast("long"))
         .filter(F.col("_n") > 0)
     )

@@ -60,12 +60,10 @@ def corpus_token_stats(
     The doc length rides the scan as `size(split(...))` — never a
     second shuffle; the only exchange here is the (doc, term) hash
     aggregate over exploded tokens (unavoidable: that IS the postings
-    build), fan_out-guarded against single-partition parquet inputs.
+    build).
     """
-    from validate_spark.session import fan_out
-
     norm = normalize_text(F.col(text_col))
-    base = fan_out(corpus).select(
+    base = corpus.select(
         F.col(id_col).alias("doc_id"),
         F.when(norm == "", F.array().cast("array<string>"))
         .otherwise(F.split(norm, " "))
@@ -218,7 +216,6 @@ def kwic_snippets(
     match-sized, never corpus × terms.
     """
     from validate_spark.operators.textstats import normalize_text
-    from validate_spark.session import fan_out
 
     qnorm = normalize_text(F.col(term_col))
     qterms = F.broadcast(
@@ -228,7 +225,7 @@ def kwic_snippets(
         .filter(F.col("term") != "")
         .distinct()
     )
-    base = fan_out(corpus).select(
+    base = corpus.select(
         F.col(id_col).alias("doc_id"),
         normalize_text(F.col(text_col)).alias("_nt"),
     )

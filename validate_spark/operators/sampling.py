@@ -210,11 +210,8 @@ def quality_quantile_filter(
     a pretraining pipeline runs after scoring (cf. CCNet, Wenzek et
     al. 2020 — public paper).
     """
-    from validate_spark.session import fan_out
-
     if keep_num < 0 or keep_den <= 0:
         raise ValueError("keep fraction must be >= 0 with positive denominator")
-    df = fan_out(df)  # score regexes run pre-exchange — never on 1 scan task
     h = F.md5(
         F.concat_ws(
             "\x1f",
@@ -250,11 +247,8 @@ def quality_quantile_thresholds(
     with map-side partial sketches (Greenwald-Khanna inside
     ``approx_percentile``) — the frame is |strata| rows, broadcastable
     by construction. No sort, no window, skew-immune."""
-    from validate_spark.session import fan_out
-
     if not 0.0 < keep_frac <= 1.0:
         raise ValueError("keep_frac must be in (0, 1]")
-    df = fan_out(df)  # sketch inputs (score regexes) at full parallelism
     return df.groupBy(F.col(strata_col).alias("stratum")).agg(
         F.percentile_approx(
             score, F.lit(1.0 - keep_frac), F.lit(accuracy)
@@ -281,14 +275,12 @@ def quality_quantile_filter_approx(
     ``thresholds`` frame to pin cut points across incremental runs
     (score drift then shows up as kept-fraction drift — a signal, not
     a bug)."""
-    from validate_spark.session import fan_out
-
     if thresholds is None:
         thresholds = quality_quantile_thresholds(
             df, strata_col, score, keep_frac, accuracy=accuracy
         )
     t = F.broadcast(thresholds.withColumnRenamed("stratum", "_qstratum"))
-    joined = fan_out(df).withColumn("_qscore", score).join(
+    joined = df.withColumn("_qscore", score).join(
         t, F.col(strata_col) == F.col("_qstratum"), "inner"
     )
     return joined.filter(F.col("_qscore") >= F.col("thr")).drop(
@@ -322,15 +314,12 @@ def stratum_quota(
 
     Ordering key is (full md5 hex, key) — the same tie-proof pair
     ``deterministic_shuffle`` uses, so the oracle replays the selection
-    with one window over the full table.
+    with one window over the full table. The spread comes from the
+    input's partitions: on a 1-partition input the ``_pid`` salt is
+    constant and phase 1 is the full window.
     """
-    from validate_spark.session import fan_out
-
     if quota < 1:
         raise ValueError("quota must be >= 1")
-    # a 1-partition input would make the _pid salt constant — phase 1
-    # then degenerates to the full window it exists to avoid
-    df = fan_out(df)
     h = F.md5(
         F.concat_ws(
             "\x1f",
@@ -442,16 +431,13 @@ def dsir_weights(
     consumers (persisted — the r4 two-branch rule); bucket stats are
     a B-row aggregate broadcast back; the per-doc rollup is the only
     key shuffle (map-side partial sums); the k-cut is
-    TakeOrderedAndProject on the exact integer. The explode rides
-    fan_out so a single-file parquet scan still uses every core."""
+    TakeOrderedAndProject on the exact integer."""
     from validate_spark.operators.textstats import normalize_text
-    from validate_spark.session import fan_out
 
     s = float(smoothing)
     B = int(n_buckets)
     toks = (
-        fan_out(df)
-        .select(
+        df.select(
             F.col(key_col).cast("string").alias("k"),
             target_pred.cast("int").alias("_is_t"),
             normalize_text(F.col(text_col)).alias("_t"),

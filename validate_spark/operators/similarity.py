@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from validate_spark.operators.dedup import cosine_sim
-from validate_spark.session import fan_out as _fan_out
 
 
 def _two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -311,9 +310,6 @@ def label_centroid_outliers(
     membership in a label's cluster — which only exists at dataset
     scale. (validators.go:598 enum; no per-record counterpart.)
     """
-    from validate_spark.session import fan_out
-
-    df = fan_out(df)  # 64-wide posexplode + folds — never on 1 scan task
     v = F.col(vec_col)
     exploded = df.select(
         F.col(label_col).alias("_lbl"),
@@ -403,12 +399,9 @@ def random_projection(
     FILTERED — a projection of a ragged vector is meaningless; the
     arrayDim validator is the advertised way to FLAG them first.
 
-    Scale: map-only on well-partitioned inputs — the projection fuses
-    into the scan. The input is fan_out-guarded (round-3 gotcha: sf
-    parquet scans as ONE partition; 1024 interpreted per-row lambda
-    multiplies on 1 of 32 cores was the q44 incident class), so an
-    under-partitioned source pays one cheap round-robin shuffle. The zip_with/aggregate HOFs are CodegenFallback
-    (interpreted per element, D·K multiplies per row); at D·K beyond
+    Scale: map-only — the projection fuses into the scan. The
+    zip_with/aggregate HOFs are CodegenFallback (interpreted per
+    element, D·K multiplies per row); at D·K beyond
     ~10⁴ per row the scale path is an Arrow-batched numpy matmul via
     mapInPandas — which this operator deliberately does NOT use
     because numpy's pairwise summation changes addition order and
@@ -432,11 +425,9 @@ def random_projection(
             for row in signs
         ]
     )
-    from validate_spark.session import fan_out
-
     scale = float(out_dim) ** 0.5
     return (
-        fan_out(df.filter(F.size(v) == in_dim))
+        df.filter(F.size(v) == in_dim)
         .select(F.col(key_col).alias("key"), projs.alias("_p"))
         .select("key", F.posexplode("_p").alias("k", "_raw"))
         .select(
@@ -677,11 +668,10 @@ def pq_encode(
     identical left-to-right IEEE chain — and `np.argmin`'s
     first-occurrence rule IS the struct-min (dist, code) tie-break, so
     code assignments are bit-for-bit the previous ones and the DuckDB
-    oracle is untouched. Still map-side only (fan_out is a no-op on
-    well-partitioned inputs); only (id, vector) columns cross the
-    Arrow boundary. Invalid vectors (NULL / ragged / non-finite) are
-    EXCLUDED — they are not encodable; `allFinite` validation is where
-    they get reported."""
+    oracle is untouched. Still map-side only; only (id, vector)
+    columns cross the Arrow boundary. Invalid vectors (NULL / ragged /
+    non-finite) are EXCLUDED — they are not encodable; `allFinite`
+    validation is where they get reported."""
     import numpy as np
 
     m = len(codebooks)
@@ -689,10 +679,8 @@ def pq_encode(
     sub = len(codebooks[0][0])
     d = m * sub
     C = _np_code_table(codebooks)
-    c = _fan_out(
-        corpus.filter(_pq_valid(F.col(vec_col), d)).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
-        )
+    c = corpus.filter(_pq_valid(F.col(vec_col), d)).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
     )
     id_t = c.schema["neighbor_id"].dataType.simpleString()
 
@@ -929,10 +917,8 @@ def ivf_pq_topk(
         [[float(x) for x in cv] for cv in centroids], dtype=np.float64
     )  # (n_cent, d)
 
-    c_base = _fan_out(
-        corpus.filter(_pq_valid(F.col(vec_col), d)).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
-        )
+    c_base = corpus.filter(_pq_valid(F.col(vec_col), d)).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
     )
     id_t = c_base.schema["neighbor_id"].dataType.simpleString()
 

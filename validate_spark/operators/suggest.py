@@ -233,13 +233,11 @@ def pattern_profile(
     cross-engine regex discipline, tests/test_regex_dialect.py), so an
     external engine replays the classification exactly.
 
-    Scale: the regex ladder is ONE codegen'd projection (per-row work →
-    routed through ``fan_out`` against 1-partition scans), then a
+    Scale: the regex ladder is ONE codegen'd projection, then a
     groupBy over ≤ len(classes)+3 distinct class labels (map-side
     partials); the total rides a window over that tiny aggregated
     frame — ONE input scan, no second pass.
     """
-    from validate_spark.session import fan_out
     from pyspark.sql import Window
 
     if classes is None:
@@ -250,7 +248,7 @@ def pattern_profile(
         cls = cls.when(v.rlike(rx), F.lit(name))
     cls = cls.otherwise(F.lit("other"))
 
-    src = fan_out(df.select(F.col(col).cast("string").alias("_v")))
+    src = df.select(F.col(col).cast("string").alias("_v"))
     per = src.groupBy(cls.alias("pattern_class")).agg(
         F.count(F.lit(1)).alias("n")
     )

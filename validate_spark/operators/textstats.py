@@ -224,14 +224,9 @@ def annotate_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     """DataFrame-level repetition annotation — prefer this over applying
     :func:`repetition_signals` expressions directly: the token split is
     STAGED in its own projection (computed once per row; inline, every
-    signal column re-splits — measured 1.2 s → 0.7 s at 600k docs), and
-    the input is fanned out to cluster parallelism first (a 1-partition
-    parquet scan otherwise runs the whole projection on one core —
-    measured 12.5 s → 1.2 s; the hashed_shingle_frame lesson again)."""
-    from validate_spark.session import fan_out
-
+    signal column re-splits — measured 1.2 s → 0.7 s at 600k docs)."""
     t = F.trim(F.coalesce(F.col(text_col), F.lit("")))
-    staged = fan_out(df).withColumn(
+    staged = df.withColumn(
         "_toks",
         F.when(t == "", F.array().cast("array<string>")).otherwise(
             F.split(t, r"\s+")
@@ -320,11 +315,7 @@ def fingerprint(text: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 def annotate(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One narrow projection adding all text-analysis columns.
-    Regex-heavy per row → fan out under-partitioned inputs first."""
-    from validate_spark.session import fan_out
-
-    df = fan_out(df)
+    """One narrow projection adding all text-analysis columns."""
     t = F.col(text_col)
     sig = quality_signals(t)
     return df.select(
@@ -357,11 +348,8 @@ def build_background_vocab(
     stack). min_count prunes the hapax tail; max_vocab caps the table
     deterministically (cnt DESC, token ASC) so it stays broadcastable.
     One explode + one count aggregate — vocab-sized output."""
-    from validate_spark.session import fan_out
-
     toks = (
-        fan_out(df)
-        .select(normalize_text(F.col(text_col)).alias("_t"))
+        df.select(normalize_text(F.col(text_col)).alias("_t"))
         .filter(F.length("_t") > 0)
         .select(F.explode(F.split("_t", " ")).alias("token"))
     )
@@ -402,16 +390,13 @@ def unigram_logprob_scores(
     order differences (~1e-13 relative) cannot reach the rounding
     tick, so the DuckDB oracle reproduces the values exactly (same
     contract as the q14 corpus averages)."""
-    from validate_spark.session import fan_out
-
     s = float(smoothing)
     stats = vocab.agg(
         F.sum("cnt").cast("double").alias("_total"),
         F.count(F.lit(1)).cast("double").alias("_v"),
     )
     toks = (
-        fan_out(corpus)
-        .select(
+        corpus.select(
             F.col(key_col).cast("string").alias("k"),
             normalize_text(F.col(text_col)).alias("_t"),
         )
@@ -452,12 +437,11 @@ def distinctive_terms(
     engines; the rational-score floor is bit-identical everywhere,
     which is what lets the result sit under the value-hash gate.
 
-    Plan: fan_out-guarded explode (the 1-partition scan gotcha) →
-    per-(doc,term) count [shuffle 1] → explicit repartition on term
-    [shuffle 2], **persisted** (MEMORY_AND_DISK) because two branches
-    consume it — the term-DF aggregate and the TF⋈DF join; without
-    the persist each branch re-runs the scan + regex + explode over
-    the whole corpus (the round-4 two-branch gotcha). Both branches
+    Plan: explode → per-(doc,term) count [shuffle 1] → explicit
+    repartition on term [shuffle 2], **persisted** (MEMORY_AND_DISK)
+    because two branches consume it — the term-DF aggregate and the
+    TF⋈DF join; without the persist each branch re-runs the scan +
+    regex + explode over the whole corpus (the round-4 two-branch gotcha). Both branches
     ride the persisted frame's term partitioning (agg and join add NO
     exchange) → per-doc top-k window [shuffle 3]. Every frame is
     token-bounded; blocks freed on driver GC of the returned plan.
@@ -465,13 +449,11 @@ def distinctive_terms(
     Reference seed: the reference has no corpus-level text analysis;
     this extends its string family (SURVEY.md §2.6) the same way the
     quality/repetition signals do."""
-    from validate_spark.session import fan_out
     from pyspark.sql.window import Window
 
     n = df.sparkSession.sparkContext.defaultParallelism
     toks = (
-        fan_out(df)
-        .select(
+        df.select(
             F.col(key_col).alias("k"),
             normalize_text(F.col(text_col)).alias("_t"),
         )
@@ -597,15 +579,12 @@ def encoding_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     common spelling — so an external engine replays the counts exactly.
 
     Scale: three ``regexp_count`` expressions in ONE codegen'd
-    projection over the corpus — no shuffle, no Python; routed through
-    ``fan_out`` so a 1-partition scan doesn't serialize the regex work
-    (the repo's recorded gotcha). NULL text yields NULL counts and a
-    NULL flag (no evidence), same as every annotator here.
+    projection over the corpus — no shuffle, no Python. NULL text
+    yields NULL counts and a NULL flag (no evidence), same as every
+    annotator here.
     """
-    from validate_spark.session import fan_out
-
     t = F.col(text_col)
-    out = fan_out(df).select(
+    out = df.select(
         "*",
         F.regexp_count(t, F.lit(MOJIBAKE_RX)).alias("n_mojibake"),
         F.regexp_count(t, F.lit(REPLACEMENT_RX)).alias("n_replacement"),
@@ -640,11 +619,9 @@ def c4_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     Emitted as SIGNALS (not applied) so a pipeline can audit the kill
     rate per source before committing — the same governance posture as
     :func:`encoding_signals`. All predicates are case-folded Column
-    expressions in the Java∩RE2 dialect; one fan_out-guarded codegen'd
+    expressions in the Java∩RE2 dialect; one codegen'd
     projection, no shuffle. NULL text → NULL signals (no evidence).
     """
-    from validate_spark.session import fan_out
-
     t = F.col(text_col)
     low = F.lower(t)
     has_curly = t.contains("{")
@@ -652,7 +629,7 @@ def c4_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     has_js = low.contains("javascript")
     has_policy = low.rlike(_C4_POLICY_RX)
     n_sent = F.regexp_count(t, F.lit(_SENTENCE_RX)).cast("long")
-    out = fan_out(df).select(
+    out = df.select(
         "*",
         has_curly.alias("has_curly"),
         has_lorem.alias("has_lorem"),
@@ -697,11 +674,9 @@ def gopher_rules(
     (``n_sym*10 > n_words`` etc.) — the working-notes rule for
     cross-engine exact selection; no float ever decides a flag. All
     counting is regexp/split Column expressions in the Java∩RE2
-    dialect, one fan_out-guarded projection, no shuffle. NULL text →
+    dialect, one projection, no shuffle. NULL text →
     NULL flags (no evidence).
     """
-    from validate_spark.session import fan_out
-
     raw = F.col(text_col)
     t = F.trim(F.coalesce(raw, F.lit("")))
     n_words = whitespace_token_count(raw).cast("long")
@@ -723,7 +698,7 @@ def gopher_rules(
         F.lower(t).rlike(rf"\b{w}\b").cast("int") for w in GOPHER_STOPWORDS
     ).cast("long")
 
-    out = fan_out(df).select(
+    out = df.select(
         "*",
         n_words.alias("n_words"),
         n_nonspace.alias("n_nonspace"),
@@ -786,7 +761,7 @@ def quality_classifier(
     cross-multiplication for cross-engine selection). The display
     score divides once at the end.
 
-    Scale: one fan_out-guarded projection, zero shuffle, zero Python —
+    Scale: one projection, zero shuffle, zero Python —
     five regexp/split counts and a dot product inside whole-stage
     codegen. A learned model with 10^5 hashed-ngram features would
     swap the count features for a broadcast weight-map probe; the
@@ -796,8 +771,6 @@ def quality_classifier(
     (register.go AddValidator) — a scoring rule is just a validator
     that returns a number; this lifts it to a first-class column.
     """
-    from validate_spark.session import fan_out
-
     w = dict(QUALITY_MODEL_WEIGHTS_E6 if weights_e6 is None else weights_e6)
     raw = F.col(text_col)
     t = F.coalesce(raw, F.lit(""))
@@ -822,7 +795,7 @@ def quality_classifier(
     unknown = set(w) - set(feats)
     if unknown:
         raise ValueError(f"unknown quality features: {sorted(unknown)}")
-    out = fan_out(df).select("*", *(feats[k].alias(k) for k in feats))
+    out = df.select("*", *(feats[k].alias(k) for k in feats))
     score_e6 = F.lit(int(bias_e6)).cast("long")
     for k in feats:  # fixed iteration order = fixed fold order
         if k in w:
@@ -861,16 +834,14 @@ def doc_keywords(
     for the doc-frequency COUNT WINDOW, key for the top-k rank. The
     doc frequency is a count().over(partitionBy(term)) on the tf
     frame, NOT a groupBy+self-join: a second branch re-scans the
-    corpus (fan_out's round-robin repartition is nondeterministic, so
-    Catalyst refuses to reuse the exchange — measured: 2 scans, 5
-    exchanges) and a join adds a build side; the window form needs
-    neither. Per-group window state is one running count (term
+    corpus (over a round-robin repartitioned input Catalyst does not
+    reuse the exchange, the repartition being nondeterministic —
+    measured: 2 scans, 5 exchanges) and a join adds a build side;
+    the window form needs neither. Per-group window state is one running count (term
     groups), then the k-row rank heap. No collect, no skew trap
     beyond a mega-doc (bounded by doc length).
     """
     from pyspark.sql.window import Window
-
-    from validate_spark.session import fan_out
 
     stop = set(STOPWORDS["en"])
     toks = F.filter(
@@ -878,8 +849,7 @@ def doc_keywords(
         lambda x: (F.length(x) >= min_len) & ~x.isin(*stop),
     )
     tf = (
-        fan_out(df)
-        .select(F.col(key_col).alias("key"), F.explode(toks).alias("term"))
+        df.select(F.col(key_col).alias("key"), F.explode(toks).alias("term"))
         .groupBy("key", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
@@ -915,17 +885,13 @@ def bpe_merge_stats(
     token stream (10^12 rows) — the pair stage's input is bounded by
     |vocab|, not corpus size. Pair building is native (transform over
     a 1..len-1 sequence + substr), no UDF; the k-cut is
-    TakeOrderedAndProject on (count desc, left, right). The explode
-    stage is fan_out-guarded (1-partition scan gotcha).
+    TakeOrderedAndProject on (count desc, left, right).
 
     Reference seed: no gookit/validate analogue (tokenizer-training
     support op for the pretraining pipeline).
     """
-    from validate_spark.session import fan_out
-
     words = (
-        fan_out(df)
-        .select(
+        df.select(
             F.explode(
                 F.filter(
                     F.split(normalize_text(F.col(text_col)), " "),
@@ -981,18 +947,15 @@ def token_entropy(
     cannot reach the round-6 tick (CLAUDE.md round-4 gotcha on
     bounded-cardinality round-6 rollups). n and c are exact int64.
 
-    Plan: fan_out-guarded explode → groupBy (key, token) → groupBy
-    key; two key-local shuffles, no distinct aggregates, no window.
+    Plan: explode → groupBy (key, token) → groupBy key; two
+    key-local shuffles, no distinct aggregates, no window.
     """
-    from validate_spark.session import fan_out
-
     toks = F.filter(
         F.split(normalize_text(F.col(text_col)), " "),
         lambda x: F.length(x) >= 1,
     )
     tf = (
-        fan_out(df)
-        .select(F.col(key_col).alias("key"), F.explode(toks).alias("tok"))
+        df.select(F.col(key_col).alias("key"), F.explode(toks).alias("tok"))
         .groupBy("key", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
@@ -1051,11 +1014,9 @@ def nfc_report(
     text plus a changed flag (normalization altered the bytes). The
     md5 crosses the engine boundary (repo hash rule); the flag feeds
     an encoding-hygiene drill-down beside encoding_signals."""
-    from validate_spark.session import fan_out
-
     t = F.col(text_col)
     norm = nfc_normalize_column(t)
-    return fan_out(df).select(
+    return df.select(
         F.col(key_col).alias("key"),
         F.md5(F.coalesce(norm, F.lit(""))).alias("nfc_fp"),
         (norm != t).alias("changed"),
@@ -1109,14 +1070,11 @@ def pii_spans(
 
     Plan: regexp_extract_all per kind into arrays on the scan, one
     posexplode per kind unioned — map-side only until the caller
-    aggregates; fan_out-guarded (regex-heavy per-row work, the
-    1-partition gotcha)."""
+    aggregates."""
     from validate_spark.functions.filters import _PII_PATTERNS
-    from validate_spark.session import fan_out
 
     name_map = {"email": "scrubEmail", "url": "scrubUrl",
                 "phone": "scrubPhone", "ip": "scrubIp"}
-    src = fan_out(df)
     parts = []
     for kind in kinds:
         pat, _ = _PII_PATTERNS[name_map[kind]]
@@ -1124,7 +1082,7 @@ def pii_spans(
             F.coalesce(F.col(text_col), F.lit("")), F.lit(pat), 0
         )
         parts.append(
-            src.select(
+            df.select(
                 F.col(key_col).alias("key"),
                 F.lit(kind).alias("kind"),
                 F.posexplode(arr).alias("pos", "span"),
@@ -1159,7 +1117,7 @@ def collocations(
     ln agrees cross-engine to ~1 ulp; the round-6 tick is 8 orders
     coarser).
 
-    Scale: one fan_out-guarded tokenize projection staged and
+    Scale: one tokenize projection staged and
     persisted (two aggregates — unigram and bigram counts — read it;
     the r4 persisted-frame-sharing rule), counts are map-side-combined
     hash aggregates bounded by |vocab| and |vocab-pairs-observed|, the
@@ -1169,11 +1127,8 @@ def collocations(
 
     Output: (bigram, c_ab, c_a, c_b, pmi) — top_n rows.
     """
-    from validate_spark.session import fan_out
-
     toks = (
-        fan_out(df)
-        .select(normalize_text(F.col(text_col)).alias("_t"))
+        df.select(normalize_text(F.col(text_col)).alias("_t"))
         .filter(F.length("_t") > 0)
         .select(F.split("_t", " ").alias("_w"))
         .persist()
@@ -1252,17 +1207,15 @@ def oov_report(
     `n_bpe` counts the BPE-ish regex pieces (`bpe_token_count`) so
     fertility compares subword pressure against whitespace tokens.
 
-    Scale: one fan_out-guarded tokenize projection; the vocabulary
+    Scale: one tokenize projection; the vocabulary
     (V-bounded by `build_background_vocab`'s cnt-desc cap) BROADCASTS
     against the exploded token stream — the corpus never reshuffles;
     one hash aggregate per branch, joined on the |groups|-sized
     frames. NULL group is kept as its own row (the k-anonymity NULL
     convention).
     """
-    from validate_spark.session import fan_out
-
     g = F.col(group_col)
-    staged = fan_out(df).select(
+    staged = df.select(
         g.alias("_g"),
         normalize_text(F.col(text_col)).alias("_t"),
         bpe_token_count(F.col(text_col)).cast("long").alias("_bpe"),
@@ -1336,19 +1289,16 @@ def typo_candidate_pairs(
     the frequency cut happens on the |vocab| frame, so hapax noise
     never inflates the join.
 
-    Scale: one fan_out-guarded tokenize projection → |vocab|-bounded
+    Scale: one tokenize projection → |vocab|-bounded
     hash aggregate → ×(len+1) variant explode on the VOCAB frame →
     one shuffle on the variant key → distinct pairs → verify.
     Output: (word_a, word_b, n_a, n_b), word_a < word_b.
     """
-    from validate_spark.session import fan_out
-
     if min_len < 1 or max_len < min_len:
         raise ValueError("need 1 <= min_len <= max_len")
     tok_rx = f"^[a-z]{{{min_len},{max_len}}}$"
     vocab = (
-        fan_out(df)
-        .select(normalize_text(F.col(text_col)).alias("_t"))
+        df.select(normalize_text(F.col(text_col)).alias("_t"))
         .filter(F.length("_t") > 0)
         .select(F.explode(F.split("_t", " ")).alias("_w"))
         .filter(F.col("_w").rlike(tok_rx))

@@ -9,52 +9,8 @@ partitions sized to the parallelism.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
-
-
-def fan_out(df):
-    """Ensure an expensive per-row stage (Arrow pandas UDF, regex-heavy
-    projection) runs at cluster parallelism, not input-file parallelism:
-    a small or badly-packed parquet source can scan as 1-2 partitions,
-    starving every core downstream (measured: minhash signatures at
-    2/32 cores). Conditional — when the input already has >=
-    defaultParallelism partitions (any real table at scale) this is a
-    no-op, so the shuffle is only ever paid on under-partitioned inputs
-    where it is trivially cheap."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-@contextmanager
-def low_shuffle(spark: SparkSession, n: int = 4):
-    """Temporarily pin ``spark.sql.shuffle.partitions`` low for a
-    SMALL-FIXTURE Structured Streaming query started inside the block.
-
-    Stateful streaming cost is dominated by state-store instances:
-    every stateful operator materializes one store PER shuffle
-    partition PER micro-batch (×2 sides for a stream-stream join), so
-    a kilobyte-scale test fixture at 32 partitions pays ~95% of its
-    wall time in empty-store setup/commit (measured: q148's outer
-    interval join, 63.9 s → a few seconds at 4). The streaming query
-    pins its shuffle-partition count at FIRST start (persisted in the
-    checkpoint offset log), so setting the conf around .start() is
-    sufficient and the restore cannot re-plan a running query.
-
-    Production note: this is a FIXTURE setting. At real scale the
-    shuffle-partition count should match cluster parallelism — keyed
-    state then shards across executors; see BENCH.md §4.
-    """
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def get_spark(
