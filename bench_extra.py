@@ -4,7 +4,11 @@ FROZEN for driver measurement; every extra probe lives here).
 Modes:
   python bench_extra.py time q233_embedding_lsh_recall [q...] [--n 2]
       Time named queries (build + noop sink, same methodology as
-      bench.py) N times each; prints per-run seconds.
+      bench.py) N times each; prints per-run seconds. One untimed
+      build + noop write of the first query runs before any timed one:
+      the first cell of a process otherwise absorbs the session and
+      JIT warm-up (q100 at sf0.1 on local[4]: 5.95-7.51 s as the first
+      cell, 0.82-1.09 s behind one warm-up cell).
   python bench_extra.py explain q233_embedding_lsh_recall [q...]
       Write .explain("formatted") for each query to
       plans/r06/<name>.txt (rename to _before/_after when committing).
@@ -47,6 +51,9 @@ def main() -> int:
     qs = em.queries()
 
     if mode == "time":
+        spark.sparkContext.setJobDescription(f"{args[0]} warm-up")
+        _noop(qs[args[0]](spark, SF_DIR))
+        spark.catalog.clearCache()
         for name in args:
             for r in range(n):
                 spark.sparkContext.setJobDescription(f"{name} run{r}")

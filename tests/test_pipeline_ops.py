@@ -2,7 +2,10 @@
 dedup (exact / MinHash-LSH / SimHash / embedding), similarity search,
 and multimodal plumbing."""
 
+from itertools import combinations
+
 import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import Row, functions as F
 
 from validate_spark.operators import textstats as ts
@@ -74,6 +77,42 @@ def test_exact_dedup(spark):
     assert g["dup_count"] == 2 and g["keep_key"] == "d1" and g["dup_keys"] == ["d2"]
     kept = dd.drop_exact_duplicates(df)
     assert sorted(r["doc_id"] for r in kept.collect()) == ["d1", "d3"]
+
+
+@given(
+    st.lists(
+        st.one_of(st.none(), st.lists(st.integers(0, 4), max_size=6)),
+        min_size=1,
+        max_size=6,
+    )
+)
+@example([[], [3], None, [2, 2, 1, 2]])
+@settings(max_examples=20, deadline=None)
+def test_upper_pairs_matches_combinations(spark, arrs):
+    """upper_pairs is itertools.combinations(arr, 2), in order, per
+    row — with a keep predicate it is the filtered subsequence; a NULL
+    array stays NULL. The rows are an inline VALUES table, so each
+    example evaluates on the driver without launching a job."""
+    lit = lambda a: (  # noqa: E731
+        "NULL" if a is None else f"array({', '.join(map(str, a))})"
+    )
+    rows = ", ".join(f"({i}, CAST({lit(a)} AS array<int>))" for i, a in enumerate(arrs))
+    df = spark.sql(f"SELECT * FROM VALUES {rows} AS t(i, arr)")
+    pair = lambda x, y: F.struct(x.alias("a"), y.alias("b"))  # noqa: E731
+    got = df.select(
+        "i",
+        dd.upper_pairs(F.col("arr"), pair).alias("all"),
+        dd.upper_pairs(F.col("arr"), pair, keep=lambda x, y: x < y).alias("lt"),
+    ).collect()
+    assert len(got) == len(arrs)
+    for r in got:
+        arr = arrs[r["i"]]
+        if arr is None:
+            assert r["all"] is None and r["lt"] is None
+            continue
+        want = list(combinations(arr, 2))
+        assert [tuple(p) for p in r["all"]] == want
+        assert [tuple(p) for p in r["lt"]] == [p for p in want if p[0] < p[1]]
 
 
 def test_minhash_lsh_neardup(spark):

@@ -90,6 +90,28 @@ def _two_phase_buckets(
     )
 
 
+def upper_pairs(arr: Column, pair, keep=None) -> Column:
+    """``pair(arr[i], arr[j])`` for every i < j, in array order — the
+    ROW-LOCAL pair expansion every candidate-pair operator runs over a
+    collected array (an LSH bucket, a prefix-gram bucket, a basket, a
+    row's failed rules): no self-join, no row identity, at most
+    size(arr)² elements per row. With ``keep``, an element is
+    ``when(keep(x, y), pair(x, y))`` and the NULLs are filtered out
+    before the flatten, so dropped pairs never reach the explode.
+    A NULL ``arr`` gives NULL."""
+
+    def row(x, i):
+        tail = F.slice(arr, i + 2, F.size(arr))
+        if keep is None:
+            return F.transform(tail, lambda y: pair(x, y))
+        return F.filter(
+            F.transform(tail, lambda y: F.when(keep(x, y), pair(x, y))),
+            lambda s: s.isNotNull(),
+        )
+
+    return F.flatten(F.transform(arr, row))
+
+
 # ---------------------------------------------------------------------------
 # 1. exact dedup
 # ---------------------------------------------------------------------------
@@ -402,55 +424,88 @@ def minhash_candidates_from_sets(
     exact-dedup pass catches their members anyway.
 
     ``size_ratio_min``: pairs whose DISTINCT-shingle-count ratio is
-    below it are dropped INSIDE the pair expansion, before the explode — J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so for a verify
-    threshold t this is an exact-safe prefilter (pass t·(1-ε)). On
-    similarity-dense corpora it cuts the exploded pair count ~25×.
+    below it are dropped INSIDE the pair expansion, before the explode
+    (``_size_ratio_pairs``). On similarity-dense corpora it cuts the
+    exploded pair count ~25×.
     """
-    rows_per_band = n_hashes // n_bands
+    # bounded hot-bucket collection — one row per (k, band), unique
+    buckets = _two_phase_buckets(
+        _band_rows(signed, n_hashes, n_bands),
+        ["band", "bsig"],
+        F.struct("k", "n"),
+        max_bucket,
+    )
+    return _size_ratio_pairs(buckets, size_ratio_min)
+
+
+def _band_rows(signed: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
+    """``(k, n, band, bsig)`` — one row per (doc, band) of a signed
+    shingle frame: ``n`` the distinct-shingle count, ``bsig`` the
+    band's bucket key."""
     # explode the band array expression itself: exploding an aliased
     # column makes Spark infer a size(bands) > 0 filter and push it
     # below the projection, hashing every band key twice per doc
-    exploded = signed.select(
+    return signed.select(
         "k",
         F.size("sh").cast("long").alias("n"),
         F.posexplode(
-            band_signatures(F.col("sig"), n_bands, rows_per_band)
+            band_signatures(F.col("sig"), n_bands, n_hashes // n_bands)
         ).alias("band", "bsig"),
     )
-    # bounded hot-bucket collection — one row per (k, band), unique
-    buckets = _two_phase_buckets(
-        exploded, ["band", "bsig"], F.struct("k", "n"), max_bucket
-    )
+
+
+def _size_ratio_pairs(buckets: DataFrame, ratio_min: float) -> DataFrame:
+    """``(a, b)`` for every pair in each bucket ``ms`` of ``(k, n)``
+    members whose set-size ratio min(n)/max(n) is ≥ ``ratio_min`` —
+    J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so for a verify threshold t
+    (pass t·(1-ε)) this prefilter is exact-safe. It runs inside the
+    pair expansion, before the explode."""
 
     def pair_ok(x, y):
         nx = x.getField("n").cast("double")
         ny = y.getField("n").cast("double")
-        return F.least(nx, ny) / F.greatest(nx, ny) >= F.lit(size_ratio_min)
+        return F.least(nx, ny) / F.greatest(nx, ny) >= F.lit(ratio_min)
 
-    # all ordered pairs within a bucket, size-ratio-filtered pre-explode
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.filter(
-                        F.transform(
-                            F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                            lambda y: F.when(
-                                pair_ok(x, y),
-                                F.struct(
-                                    x.getField("k").alias("a"),
-                                    y.getField("k").alias("b"),
-                                ),
-                            ),
-                        ),
-                        lambda s: s.isNotNull(),
-                    ),
-                )
-            )
-        ).alias("p")
+    pairs = upper_pairs(
+        F.col("ms"),
+        lambda x, y: F.struct(
+            x.getField("k").alias("a"), y.getField("k").alias("b")
+        ),
+        keep=pair_ok,
     )
-    return pairs.select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    return buckets.select(F.explode(pairs).alias("p")).select(
+        F.col("p.a").alias("a"), F.col("p.b").alias("b")
+    )
+
+
+def _jaccard(x: str, y: str) -> Column:
+    """Jaccard of two distinct-element arrays, rounded to 6; 0.0 when
+    both are empty."""
+    inter = F.size(F.array_intersect(x, y)).cast("double")
+    union = F.size(F.array_union(x, y)).cast("double")
+    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6)
+
+
+def _jaccard_verify(
+    pairs: DataFrame, sets_: DataFrame, col: str, n_parts: int, threshold: float
+) -> DataFrame:
+    """``(a, b, jaccard)`` for the distinct candidate ``pairs`` whose
+    exact Jaccard over ``sets_``' ``(k, col)`` arrays is ≥ threshold.
+
+    The explicit repartition of the pair frame matters: candidate pairs
+    are tiny in bytes, so AQE coalesces them into 1-2 partitions and
+    the expensive per-pair array intersection runs nearly serial
+    (measured 86s → parallel after repartition at 2.6M pairs). The
+    distinct after it reuses its hash partitioning on a, so a pair
+    found in several buckets costs one Exchange, not two."""
+    pre = pairs.repartition(n_parts, "a").distinct()
+    a = sets_.select(F.col("k").alias("a"), F.col(col).alias(f"{col}_a"))
+    b = sets_.select(F.col("k").alias("b"), F.col(col).alias(f"{col}_b"))
+    j = pre.join(a, "a").join(b, "b")
+    return (
+        j.select("a", "b", _jaccard(f"{col}_a", f"{col}_b").alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def minhash_dedup_pairs(
@@ -502,22 +557,8 @@ def minhash_dedup_pairs(
         staged, n_hashes=n_hashes, n_bands=n_bands,
         max_bucket=max_bucket, size_ratio_min=threshold - 1e-6,
     )
-    # explicit repartition of the pair frame: candidate pairs are tiny
-    # in bytes, so AQE coalesces them into 1-2 partitions and the
-    # expensive per-pair array intersection runs nearly serial
-    # (measured 86s → parallel after repartition at 2.6M pairs)
     n_parts = max(df.sparkSession.sparkContext.defaultParallelism * 2, 16)
-    pre = cands.repartition(n_parts, "a").distinct()
-    a = staged.select(F.col("k").alias("a"), F.col("sh").alias("sh_a"))
-    b = staged.select(F.col("k").alias("b"), F.col("sh").alias("sh_b"))
-    j = pre.join(a, "a").join(b, "b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        j.select("a", "b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_verify(cands, staged, "sh", n_parts, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -616,12 +657,7 @@ def gram_set_jaccard_pairs(
     # regex tokenize + hash scan — the minhash/containment
     # persisted-frame-sharing pattern (CLAUDE.md r4), MEMORY_AND_DISK
     # so a corpus-scale frame spills instead of evicting
-    hashed = sets_.select(
-        "k",
-        F.array_sort(
-            F.array_distinct(F.transform("grams", lambda g: F.xxhash64(g)))
-        ).alias("gh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    hashed = _hashed_grams(sets_).persist(StorageLevel.MEMORY_AND_DISK)
     # rarest-first global order: explode grams, count document
     # frequency per gram (partial agg), join it back, and keep each
     # doc's plen smallest (df, g) pairs as the prefix. Partition counts
@@ -655,48 +691,19 @@ def gram_set_jaccard_pairs(
     buckets = _two_phase_buckets(
         prefixed, ["g"], F.struct("k", "n"), max_bucket
     )
-    ratio_min = threshold - 1e-6
+    pairs = _size_ratio_pairs(buckets, threshold - 1e-6)
+    return _jaccard_verify(pairs, hashed, "gh", n_parts, threshold)
 
-    def pair_ok(x, y):
-        nx = x.getField("n").cast("double")
-        ny = y.getField("n").cast("double")
-        return F.least(nx, ny) / F.greatest(nx, ny) >= F.lit(ratio_min)
 
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.filter(
-                        F.transform(
-                            F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                            lambda y: F.when(
-                                pair_ok(x, y),
-                                F.struct(
-                                    x.getField("k").alias("a"),
-                                    y.getField("k").alias("b"),
-                                ),
-                            ),
-                        ),
-                        lambda s: s.isNotNull(),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.a", "p.b")
-
-    # de-duplicated after the repartition: the distinct reuses its hash
-    # partitioning on a (one Exchange, not two)
-    pre = pairs.repartition(n_parts, "a").distinct()
-    a = hashed.select(F.col("k").alias("a"), F.col("gh").alias("gh_a"))
-    b = hashed.select(F.col("k").alias("b"), F.col("gh").alias("gh_b"))
-    j = pre.join(a, "a").join(b, "b")
-    inter = F.size(F.array_intersect("gh_a", "gh_b")).cast("double")
-    union = F.size(F.array_union("gh_a", "gh_b")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        j.select("a", "b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+def _hashed_grams(sets_: DataFrame) -> DataFrame:
+    """``(k, gh)`` — each doc's distinct gram hashes (xxhash64, sorted)
+    from a ``(k, grams)`` frame. Callers persist it themselves: their
+    storage levels differ, and so would their plans."""
+    return sets_.select(
+        "k",
+        F.array_sort(
+            F.array_distinct(F.transform("grams", lambda g: F.xxhash64(g)))
+        ).alias("gh"),
     )
 
 
@@ -925,19 +932,14 @@ def simhash_candidates(
     )
     pairs = buckets.select(
         F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                        lambda y: F.struct(
-                            x.getField("k").alias("a"),
-                            y.getField("k").alias("b"),
-                            x.getField("sig").alias("sa"),
-                            y.getField("sig").alias("sb"),
-                        ),
-                    ),
-                )
+            upper_pairs(
+                F.col("ms"),
+                lambda x, y: F.struct(
+                    x.getField("k").alias("a"),
+                    y.getField("k").alias("b"),
+                    x.getField("sig").alias("sa"),
+                    y.getField("sig").alias("sb"),
+                ),
             )
         ).alias("p")
     ).select("p.a", "p.b", "p.sa", "p.sb").distinct()
@@ -1318,19 +1320,14 @@ def embedding_neardup_lsh(
         )
     pairs = grouped.select(
         F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                        lambda y: F.struct(
-                            F.least(x.getField("k"), y.getField("k")).alias("a"),
-                            F.greatest(x.getField("k"), y.getField("k")).alias("b"),
-                            x.getField("vec").alias("va"),
-                            y.getField("vec").alias("vb"),
-                        ),
-                    ),
-                )
+            upper_pairs(
+                F.col("ms"),
+                lambda x, y: F.struct(
+                    F.least(x.getField("k"), y.getField("k")).alias("a"),
+                    F.greatest(x.getField("k"), y.getField("k")).alias("b"),
+                    x.getField("vec").alias("va"),
+                    y.getField("vec").alias("vb"),
+                ),
             )
         ).alias("p")
     ).select("p.a", "p.b", "p.va", "p.vb")
@@ -1678,16 +1675,8 @@ def minhash_index_bands(
     """
     from pyspark.sql import Window
 
-    rows_per_band = n_hashes // n_bands
     signed = signed_shingle_frame(df, text_col, key_col, k=k, n_hashes=n_hashes)
-    exploded = signed.select(
-        "k",
-        F.size("sh").cast("long").alias("n"),
-        F.posexplode(
-            band_signatures(F.col("sig"), n_bands, rows_per_band)
-        ).alias("band", "bsig"),
-    )
-    return exploded.withColumn(
+    return _band_rows(signed, n_hashes, n_bands).withColumn(
         "bucket_n",
         F.count(F.lit(1)).over(Window.partitionBy("band", "bsig")).cast("long"),
     )
@@ -1739,16 +1728,11 @@ def incremental_minhash_neardup(
     """
     from pyspark.storagelevel import StorageLevel
 
-    rows_per_band = n_hashes // n_bands
     bstaged = signed_shingle_frame(
         batch, text_col, key_col, k=k, n_hashes=n_hashes
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    bexp = bstaged.select(
-        F.col("k").alias("bk"),
-        F.size("sh").cast("long").alias("bn"),
-        F.posexplode(
-            band_signatures(F.col("sig"), n_bands, rows_per_band)
-        ).alias("band", "bsig"),
+    bexp = _band_rows(bstaged, n_hashes, n_bands).select(
+        F.col("k").alias("bk"), F.col("n").alias("bn"), "band", "bsig"
     )
     if broadcast_batch:
         bexp = F.broadcast(bexp)
@@ -1776,16 +1760,11 @@ def incremental_minhash_neardup(
             "bk",
         )
     )
-    inter = F.size(F.array_intersect("sh_b", "sh_i")).cast("double")
-    union = F.size(F.array_union("sh_b", "sh_i")).cast("double")
-    jac = F.round(
-        F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6
-    )
     return (
         verify.select(
             F.col("bk").alias("k"),
             F.col("ik").alias("index_key"),
-            jac.alias("jaccard"),
+            _jaccard("sh_b", "sh_i").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -2416,12 +2395,7 @@ def containment_pairs(
     """
     pct = int(threshold_pct)
     sets_ = word_ngram_frame(df, text_col, key_col, n=n)
-    hashed = sets_.select(
-        "k",
-        F.array_sort(
-            F.array_distinct(F.transform("grams", lambda g: F.xxhash64(g)))
-        ).alias("gh"),
-    ).persist()
+    hashed = _hashed_grams(sets_).persist()
     spark = df.sparkSession
     n_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
     grams_doc = hashed.select(
@@ -2501,9 +2475,9 @@ def cross_source_dup_matrix(
     collects that needed the two-phase (pid, key) stage: a fingerprint
     cannot have more entries than there are sources, so the hot-key
     failure mode structurally cannot occur (documented, not assumed).
-    Source pairs then expand ROW-LOCALLY from that array (the q230
-    rule: never a self-join on the fingerprint frame) and one
-    |sources|²-bounded hash aggregate finishes.
+    Source pairs then expand ROW-LOCALLY from that array
+    (``upper_pairs``: never a self-join on the fingerprint frame) and
+    one |sources|²-bounded hash aggregate finishes.
 
     Output: (source_a, source_b, n_shared_fps, docs_a, docs_b),
     source_a < source_b, only pairs that actually share content.
@@ -2524,11 +2498,14 @@ def cross_source_dup_matrix(
     )
     pairs = per_fp.filter(F.size("_ss") >= 2).select(
         F.explode(
-            F.expr(
-                "flatten(transform(_ss, (x, i) -> "
-                "transform(slice(_ss, i + 2, size(_ss)), "
-                "y -> struct(x._src AS sa, y._src AS sb, "
-                "x._n AS na, y._n AS nb))))"
+            upper_pairs(
+                F.col("_ss"),
+                lambda x, y: F.struct(
+                    x.getField("_src").alias("sa"),
+                    y.getField("_src").alias("sb"),
+                    x.getField("_n").alias("na"),
+                    y.getField("_n").alias("nb"),
+                ),
             )
         ).alias("_p")
     )

@@ -48,10 +48,6 @@ class ValidationResult:
     key_cols: list[str]
     stop_on_error: bool = False  # FAILED was sliced to the first failure
 
-    @property
-    def is_lazy(self) -> bool:
-        return True
-
     def verdicts(self) -> DataFrame:
         """Per-row verdict: key columns + pass flag + n_violations."""
         return self.annotated.select(
@@ -173,6 +169,8 @@ class ValidationResult:
         need a row identity and shuffles billions of violation rows at
         10^12 scale), then one hash aggregate over ≤ |rules|² keys.
         """
+        from validate_spark.operators.dedup import upper_pairs
+
         rules = F.array_sort(
             F.transform(
                 F.col(FAILED_COL),
@@ -181,16 +179,8 @@ class ValidationResult:
                 ),
             )
         )
-        pairs = F.flatten(
-            F.transform(
-                rules,
-                lambda x, i: F.transform(
-                    F.slice(rules, i + 2, F.size(rules)),
-                    lambda y: F.struct(
-                        x.alias("rule_a"), y.alias("rule_b")
-                    ),
-                ),
-            )
+        pairs = upper_pairs(
+            rules, lambda x, y: F.struct(x.alias("rule_a"), y.alias("rule_b"))
         )
         return (
             self.annotated.filter(F.size(F.col(FAILED_COL)) >= 2)
@@ -255,20 +245,13 @@ class ValidationResult:
         )
         return rows[0]["message"] if rows else None
 
-    def summary(self) -> DataFrame:
-        """Violation counts per (field, validator) — dataset rollup."""
-        return (
-            self.violations()
-            .groupBy("field", "validator", "message")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-
     def rule_report(self) -> DataFrame:
         """Per-rule (field, validator, n_fail, n_pass) WITHOUT exploding:
         one aggregate over the results array — each partition emits
-        len(rules) longs (map-side partial), vs ``summary()`` which
-        shuffles one exploded row per violation. The right shape for a
-        10^12-row health dashboard; includes rules with zero failures."""
+        len(rules) longs (map-side partial), vs ``violations()`` grouped
+        by rule, which shuffles one exploded row per violation. The
+        right shape for a 10^12-row health dashboard; includes rules
+        with zero failures."""
         aggs = [
             F.coalesce(
                 F.sum((~F.col(RESULTS_COL)[i].getField("ok")).cast("long")),
@@ -306,8 +289,8 @@ class ValidationResult:
 
         At 10^12 rows the violations frame itself can be billions of
         rows; materializing all of them costs more than the validation.
-        The scale pattern: keep COUNTS exact (``summary()`` — a tiny
-        aggregate) and persist only a reproducible row sample for
+        The scale pattern: keep COUNTS exact (``rule_report()`` — a
+        tiny aggregate) and persist only a reproducible row sample for
         debugging. Selection is by key hash, not ``rand()``, so re-runs
         and resumed jobs sample the SAME rows (lineage-stable), and the
         filter evaluates map-side — zero extra shuffle."""

@@ -379,7 +379,7 @@ def phash_candidates(
     Keys compare as STRINGS in the pair ordering (a < b) — the
     `_two_phase_buckets` member-struct contract.
     """
-    from validate_spark.operators.dedup import _two_phase_buckets
+    from validate_spark.operators.dedup import _two_phase_buckets, upper_pairs
 
     # stage px and s as NAMED columns: CollapseProject keeps a
     # multiply-referenced non-cheap alias in its own projection, so
@@ -419,19 +419,14 @@ def phash_candidates(
     )
     pairs = buckets.select(
         F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                        lambda y: F.struct(
-                            x.getField("k").alias("a"),
-                            y.getField("k").alias("b"),
-                            x.getField("pc").alias("pa"),
-                            y.getField("pc").alias("pb"),
-                        ),
-                    ),
-                )
+            upper_pairs(
+                F.col("ms"),
+                lambda x, y: F.struct(
+                    x.getField("k").alias("a"),
+                    y.getField("k").alias("b"),
+                    x.getField("pc").alias("pa"),
+                    y.getField("pc").alias("pb"),
+                ),
             )
         ).alias("p")
     ).select("p.a", "p.b", "p.pa", "p.pb").distinct()

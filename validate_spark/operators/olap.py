@@ -1190,15 +1190,16 @@ def basket_pairs(
     ``dedup._two_phase_buckets`` — the (spark_partition_id, key)
     stage that bounds every aggregation buffer to task input even on
     a hot basket key (the round-4 LSH lesson, applied at birth).
-    Pairs expand ROW-LOCALLY from each sorted array (q230 rule: no
-    per-basket self-join); supports and N count the SAME capped
-    universe (no lift bias from dropped baskets); the size filter and
-    the membership join share one exchange (both keyed on the basket);
-    the final cut is orderBy+limit = TakeOrderedAndProject.
+    Pairs expand ROW-LOCALLY from each sorted array
+    (``dedup.upper_pairs``: no per-basket self-join); supports and N
+    count the SAME capped universe (no lift bias from dropped
+    baskets); the size filter and the membership join share one
+    exchange (both keyed on the basket); the final cut is
+    orderBy+limit = TakeOrderedAndProject.
 
     Output: (item_a, item_b, c_ab, c_a, c_b, n_baskets, lift).
     """
-    from validate_spark.operators.dedup import _two_phase_buckets
+    from validate_spark.operators.dedup import _two_phase_buckets, upper_pairs
 
     bi = (
         lineitem.select(
@@ -1218,10 +1219,8 @@ def basket_pairs(
     )
     pairs = buckets.select(
         F.explode(
-            F.expr(
-                "flatten(transform(ms, (x, i) -> "
-                "transform(slice(ms, i + 2, size(ms)), "
-                "y -> struct(x AS a, y AS b))))"
+            upper_pairs(
+                F.col("ms"), lambda x, y: F.struct(x.alias("a"), y.alias("b"))
             )
         ).alias("_p")
     ).select(F.col("_p.a").alias("item_a"), F.col("_p.b").alias("item_b"))

@@ -12,7 +12,7 @@ Three usage shapes:
    failed-rules columns); write wherever, no state, no watermark needed.
 2. ``windowed_violation_counts`` — per-(window, field, validator)
    violation counts with a watermark for late data: the streaming
-   analogue of ``ValidationResult.summary()``.
+   analogue of ``ValidationResult.violations()`` grouped by rule.
 3. ``foreach_batch_validator`` — per-micro-batch callback that reuses
    one compiled plan and appends verdicts/violations to batch sinks;
    use when the sink isn't streaming-native (e.g. plain parquet dirs
