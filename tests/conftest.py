@@ -10,6 +10,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A checkpoint dir for one test: the loops that checkpoint through
+    ``session.checkpoint`` switch to reliable checkpoints while it is
+    set. Teardown restores "no dir" — the session outlives the test,
+    and a dir left behind would silently switch every later loop."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    yield
+    sc._jsc.sc().setCheckpointDir(None)
+
+
 def rows_to_set(df, cols=None):
     """Order-insensitive row comparison helper."""
     if cols:

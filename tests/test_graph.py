@@ -11,7 +11,7 @@ def _ranks(spark, edges, **kw):
     e = spark.createDataFrame(edges, "src long, dst long")
     return {
         r["node"]: r["rank_e12"]
-        for r in pagerank(e, checkpoint=False, **kw).collect()
+        for r in pagerank(e, **kw).collect()
     }
 
 
@@ -45,24 +45,11 @@ def test_parallel_edges_split_outdegree(spark):
     assert r[3] == base + third
 
 
-def test_pagerank_reliable_checkpoint(spark, tmp_path):
-    # reliable=True rounds truncate into the reliable checkpoint dir
-    # (executor-loss-survivable at cluster scale) and must replay the
-    # exact same integer fixed point as the local default
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    e = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
-    r = {
-        row["node"]: row["rank_e12"]
-        for row in pagerank(e, n_iters=2, reliable=True).collect()
-    }
-    assert r == {1: SCALE // 2, 2: SCALE // 2}
-
-
 def test_total_mass_is_bounded_and_positive(spark):
     docs = spark.range(0, 50).select(F.col("id").alias("doc_id"))
     e = synthetic_doc_links(docs)
     assert e.count() == 150  # 3 links per doc, deterministic
-    out = pagerank(e, n_iters=3, checkpoint=False)
+    out = pagerank(e, n_iters=3)
     rows = out.collect()
     assert len(rows) == 50
     total = sum(r["rank_e12"] for r in rows)
@@ -173,10 +160,3 @@ def test_k_core_empty_and_normalization(spark):
     # whole graph already a k-core: early-stops round 1, unchanged
     k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
     assert _kcore(spark, k4, 3) == {i: 3 for i in range(4)}
-
-
-def test_k_core_reliable_checkpoint(spark, tmp_path):
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    edges = [(1, 2), (2, 3), (3, 1), (3, 4)]
-    out = _kcore(spark, edges, 2, reliable=True)
-    assert out == {1: 2, 2: 2, 3: 2}

@@ -2,6 +2,7 @@
 dedup (exact / MinHash-LSH / SimHash / embedding), similarity search,
 and multimodal plumbing."""
 
+import uuid
 from itertools import combinations
 
 import pytest
@@ -693,20 +694,6 @@ def test_blocked_url_docs_normalization(spark):
     }
 
 
-def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):
-    from validate_spark.operators import dedup as dd
-
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "a string, b string"
-    )
-    got = {
-        (r["member"], r["cluster"])
-        for r in dd.dedup_clusters(pairs, reliable=True).collect()
-    }
-    assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
-
-
 def test_pack_sequences_semantics(spark):
     from validate_spark.operators.packing import pack_sequences, packing_report
 
@@ -835,8 +822,7 @@ def test_semantic_contamination(spark):
 def test_incremental_exact_dedup(spark):
     """Three-way classification vs an index: fingerprints already in
     the index are dup_index (every copy); new fingerprints keep the
-    min-key copy as novel and the rest as dup_batch. Broadcast and
-    shuffle probes agree."""
+    min-key copy as novel and the rest as dup_batch."""
     from validate_spark.operators.textstats import fingerprint
 
     batch = spark.createDataFrame(
@@ -847,19 +833,11 @@ def test_incremental_exact_dedup(spark):
         spark.createDataFrame([("known text",)], "text string")
         .select(fingerprint(F.col("text")).alias("fp"))
     )
-    for bc in (False, True):
-        got = {
-            r["k"]: r["status"]
-            for r in dd.incremental_exact_dedup(
-                batch, index, broadcast_index=bc
-            ).collect()
-        }
-        assert got == {
-            "1": "novel",
-            "2": "dup_batch",
-            "3": "dup_index",
-            "4": "novel",
-        }
+    got = {
+        r["k"]: r["status"]
+        for r in dd.incremental_exact_dedup(batch, index).collect()
+    }
+    assert got == {"1": "novel", "2": "dup_batch", "3": "dup_index", "4": "novel"}
     # novel rows are exactly what joins back into the corpus + index
     novel = dd.incremental_exact_dedup(batch, index).filter(
         "status = 'novel'"
@@ -968,9 +946,8 @@ def test_token_share_report(spark):
 
 def test_incremental_minhash_neardup(spark):
     """Exact copies of indexed docs match at 0.99; appended-tail decoys
-    and novel texts do not; broadcast and shuffle probes agree; hot
-    buckets beyond max_bucket are dropped (degenerate duplicates are
-    exact-dedup's job)."""
+    and novel texts do not; hot buckets beyond max_bucket are dropped
+    (degenerate duplicates are exact-dedup's job)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ib = dd.minhash_index_bands(docs)
     iss = dd.hashed_shingle_frame(docs)
@@ -996,14 +973,6 @@ def test_incremental_minhash_neardup(spark):
     # no decoy/novel batch doc matches anything
     bad = {k for k, _ in got} - {a for a, _ in copies}
     assert not bad
-
-    got2 = {
-        (r["k"], r["index_key"])
-        for r in dd.incremental_minhash_neardup(
-            batch, ib, iss, threshold=0.99, broadcast_batch=False
-        ).collect()
-    }
-    assert got2 == got
 
     # max_bucket=0 drops every bucket -> nothing can match
     assert (
@@ -1132,41 +1101,87 @@ def test_shingle_sig_udf_matches_python_reference(spark):
             assert got["sig"] == sig and len(sig) == n, t
 
 
-def test_dedup_clusters_converged_pairs_one_round_no_count_job(spark, tmp_path):
+def _job_ops(spark, fn):
+    """Run ``fn()`` in a job group of its own → (its result, the op of
+    each job's last stage — ``localCheckpoint``, ``checkpoint``, ... —
+    in job order)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    ops = [
+        tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)).name.split(" at ")[0]
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
+    return out, ops
+
+
+def test_dedup_clusters_converged_pairs_one_round_no_count_job(spark):
     """Pairs already at their fixed point after initialization run one
     propagation round, and the round's own checkpoint job observes the
     changed-label count: past the jobs of ``max_iter=0`` (initialization
     alone) the call runs exactly one checkpoint job, and that job is the
     call's last — no job runs after it to test convergence."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     # a JVM-local relation: a Python-list frame re-runs a Python scan
     # per action, which would dominate this test's time
     pairs = spark.sql("VALUES ('a', 'b'), ('c', 'd'), ('f', 'e') AS t(a, b)")
+    _, init = _job_ops(spark, lambda: dd.dedup_clusters(pairs, max_iter=0))
+    out, full = _job_ops(spark, lambda: dd.dedup_clusters(pairs))
+    assert full[len(init):].count("localCheckpoint") == 1, full
+    assert full[-1] == "localCheckpoint", full
+    got = {(r["member"], r["cluster"]) for r in out.collect()}
+    assert got == {("a", "a"), ("b", "a"), ("c", "c"), ("d", "c"), ("e", "e"), ("f", "e")}
 
-    def job_names(group, **kw):
-        """Last-stage name of every job the call ran, in job order."""
-        sc.setJobGroup(group, group)
-        try:
-            out = dd.dedup_clusters(pairs, **kw)
-        finally:
-            sc.setJobGroup("", "")
-        names = [
-            tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)).name
-            for j in sorted(tracker.getJobIdsForGroup(group))
-        ]
-        return out, names
 
-    for reliable in (False, True):
-        ckpt = "checkpoint" if reliable else "localCheckpoint"
-        _, init = job_names(f"dc_init_{reliable}", max_iter=0, reliable=reliable)
-        out, full = job_names(f"dc_full_{reliable}", reliable=reliable)
-        ops = [n.split(" at ")[0] for n in full]
-        assert ops[len(init):].count(ckpt) == 1, full
-        assert ops[-1] == ckpt, full
-        got = {(r["member"], r["cluster"]) for r in out.collect()}
-        assert got == {("a", "a"), ("b", "a"), ("c", "c"), ("d", "c"), ("e", "e"), ("f", "e")}
+@pytest.mark.parametrize("loop", ["dedup_clusters", "pagerank", "k_core"])
+def test_loop_checkpoint_policy(spark, request, loop):
+    """The fixed-point loops checkpoint through ``session.checkpoint``:
+    local checkpoints with no checkpoint dir, reliable ones once
+    ``sc.setCheckpointDir`` is set — never a mix — and the same output
+    either way. (k_core's last job is its round's edge count, so every
+    checkpoint job is checked, not only the last.)"""
+    from validate_spark.operators.graph import k_core, pagerank
+
+    edges = spark.sql("VALUES (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L) AS t(a, b)")
+    run = {
+        "dedup_clusters": lambda: dd.dedup_clusters(edges),
+        "pagerank": lambda: pagerank(edges, src_col="a", dst_col="b", n_iters=2),
+        "k_core": lambda: k_core(edges, 2, src_col="a", dst_col="b"),
+    }[loop]
+    got = {}
+    for policy in ("localCheckpoint", "checkpoint"):
+        if policy == "checkpoint":
+            request.getfixturevalue("checkpoint_dir")
+        out, ops = _job_ops(spark, run)
+        kinds = [op for op in ops if op in ("localCheckpoint", "checkpoint")]
+        assert kinds and set(kinds) == {policy}, ops
+        got[policy] = sorted(map(tuple, out.collect()))
+    assert got["localCheckpoint"] == got["checkpoint"]
+
+
+def test_dedup_clusters_releases_superseded_rounds(spark):
+    """Each round releases the previous round's checkpoint blocks, so a
+    call leaves exactly one persisted RDD behind: the final round's
+    labels. Compared by id, not count — the ContextCleaner may drop
+    older ids concurrently."""
+    sc = spark.sparkContext
+
+    def persisted():
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    chain = spark.sql(
+        "VALUES ('n0', 'n1'), ('n1', 'n2'), ('n2', 'n3'), ('n3', 'n4') AS t(a, b)"
+    )
+    for max_iter in (0, 25):
+        before = persisted()
+        _, ops = _job_ops(spark, lambda: dd.dedup_clusters(chain, max_iter=max_iter))
+        assert len(persisted() - before) == 1, max_iter
+    # initialization plus at least two rounds each superseded a predecessor
+    assert ops.count("localCheckpoint") >= 3, ops
 
 
 def test_quality_quantile_filter_exact(spark):

@@ -20,8 +20,7 @@ Scale shape (corpus = 10^12 docs, benchmark = eval sets, i.e. SMALL):
   (operators/dedup.py) — staged projections, no per-row Python.
 
 A benchmark too large to broadcast does not belong in this operator:
-pass ``broadcast_bench=False`` to fall back to a shuffle join
-(refcheck's large-catalog rule), same semantics.
+that is ``bloom_contamination``'s job (below).
 """
 
 from __future__ import annotations
@@ -39,7 +38,6 @@ def contamination_report(
     *,
     n: int = 3,
     threshold: float = 0.5,
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Per-corpus-doc contamination report:
     ``(k, n_grams, n_hit, overlap, contaminated)`` where ``overlap`` =
@@ -58,14 +56,12 @@ def contamination_report(
     the SAME benchmark gram set the previous form broadcast as rows —
     when it outgrows broadcast, that is `bloom_contamination`'s job."""
     corpus_g = word_ngram_frame(corpus, text_col, key_col, n=n)
-    bench_set = (
+    bench_set = F.broadcast(
         word_ngram_frame(bench, text_col, key_col, n=n)
         .select(F.explode("grams").alias("g"))
         .distinct()
         .agg(F.collect_list("g").alias("_bg"))
     )
-    if broadcast_bench:
-        bench_set = F.broadcast(bench_set)
     rep = corpus_g.crossJoin(bench_set).select(
         "k",
         F.size("grams").alias("n_grams"),
@@ -113,8 +109,6 @@ def blocked_url_docs(
     text_col: str = "text",
     key_col: str = "doc_id",
     domain_col: str = "domain",
-    *,
-    broadcast_blocklist: bool = True,
 ) -> DataFrame:
     """Docs that link to a blocklisted domain →
     ``(k, hits: array<string>, n_hits)`` — the URL-hygiene screen every
@@ -124,18 +118,16 @@ def blocked_url_docs(
     a map-only projection over the corpus; the blocklist (small by
     nature) is **broadcast**, so the corpus never shuffles for the
     membership probe; only MATCHED (doc, domain) pairs — bounded by
-    |blocklist| per doc — shuffle into the per-doc rollup. A blocklist
-    too big to broadcast: ``broadcast_blocklist=False`` → shuffle join
-    (refcheck's large-catalog rule), same semantics."""
+    |blocklist| per doc — shuffle into the per-doc rollup."""
     doms = corpus.select(
         F.col(key_col).cast("string").alias("k"),
         F.explode(extract_domains(text_col)).alias("dom"),
     )
-    bl = blocklist.select(
-        F.lower(F.col(domain_col).cast("string")).alias("dom")
-    ).distinct()
-    if broadcast_blocklist:
-        bl = F.broadcast(bl)
+    bl = F.broadcast(
+        blocklist.select(
+            F.lower(F.col(domain_col).cast("string")).alias("dom")
+        ).distinct()
+    )
     hits = doms.join(bl, "dom", "inner")
     # n_hits from the collected set, NOT count_distinct: a distinct
     # aggregate beside collect_set re-plans as a two-phase Expand

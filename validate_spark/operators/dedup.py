@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from validate_spark.operators.textstats import fingerprint, normalize_text
+from validate_spark.session import checkpoint
 
 
 def _two_phase_buckets(
@@ -712,12 +713,13 @@ def _hashed_grams(sets_: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _free_local_blocks(df: DataFrame) -> None:
-    """Best-effort explicit release of a localCheckpoint-ed round's
-    storage blocks (the LogicalRDD's persisted RDD). Without this,
-    blocks linger until the driver GCs the old DataFrame — fine for
-    small label frames, wasteful over many rounds at scale. Internal
-    API (py4j into LogicalRDD.rdd), so failures are swallowed: cleanup
-    then simply falls back to the ContextCleaner."""
+    """Best-effort explicit release of a checkpointed round's storage
+    blocks (the LogicalRDD's persisted RDD). Without this, local
+    checkpoint blocks linger until the driver GCs the old DataFrame —
+    fine for small label frames, wasteful over many rounds at scale.
+    A reliable checkpoint's RDD is not persisted, so there it does
+    nothing. Internal API (py4j into LogicalRDD.rdd), so failures are
+    swallowed: cleanup then simply falls back to the ContextCleaner."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
@@ -754,20 +756,20 @@ def _initial_labels(adj: DataFrame) -> DataFrame:
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame, *, max_iter: int = 25, reliable: bool = False
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, *, max_iter: int = 25) -> DataFrame:
     """(member, cluster) assignment from near-dup pairs — connected
     components via iterative min-label propagation: each round joins the
     edge list with the current labels and takes the per-node min
     (one shuffle join + one hash-aggregate per round), converging in
     O(component diameter) rounds. Near-dup clusters have tiny diameter
     (every member pairs with the canonical doc through 1-2 hops), so
-    2-4 rounds in practice. Each round's labels are localCheckpoint-ed:
-    the logical plan is TRUNCATED to the materialized result, so the
-    analyzer/optimizer never sees a join-per-round nest and a
-    slow-converging graph cannot walk into plan-size blowup (cache()
-    alone would NOT do this — it truncates execution, not the plan).
+    2-4 rounds in practice. Each round's labels are checkpointed
+    (``session.checkpoint``: reliable when ``sc.setCheckpointDir`` is
+    set, local otherwise): the logical plan is TRUNCATED to the
+    materialized result, so the analyzer/optimizer never sees a
+    join-per-round nest and a slow-converging graph cannot walk into
+    plan-size blowup (cache() alone would NOT do this — it truncates
+    execution, not the plan).
     Cluster id = min member key.
 
     Fixed point is detected with a changed-label count — deterministic,
@@ -783,13 +785,10 @@ def dedup_clusters(
     initialization's ``groupBy("u")`` both reuse that hash
     partitioning, so neither adds an Exchange.
 
-    ``reliable=True`` uses ``checkpoint()`` (requires
-    ``sc.setCheckpointDir``) instead of ``localCheckpoint()``: blocks
-    live in the checkpoint dir, so losing an executor mid-loop does NOT
-    kill the job — the right setting for real cluster runs (local
-    checkpoints truncate lineage, so they are unrecoverable by design).
-    Either way the superseded round's storage is released explicitly
-    each iteration, not left to driver GC.
+    The superseded round's storage blocks are released explicitly each
+    iteration, not left to driver GC (a reliable checkpoint holds no
+    blocks, so the release is a no-op there; its files go with the
+    checkpoint dir's cleanup).
 
     ``max_iter`` bounds the rounds AFTER initialization, which already
     runs propagation round 1: at most ``max_iter + 1`` rounds run.
@@ -802,18 +801,11 @@ def dedup_clusters(
 
     if max_iter < 0:
         raise ValueError(f"max_iter must be >= 0, got {max_iter}")
-    if reliable:
-        ckpt = lambda d: d.checkpoint()  # noqa: E731
-        free = lambda d: None  # noqa: E731 — files cleaned by
-        # spark.cleaner.referenceTracking.cleanCheckpoints / dir TTL
-    else:
-        ckpt = lambda d: d.localCheckpoint()  # noqa: E731
-        free = _free_local_blocks
     adj = _adjacency(pairs).cache()
-    labels = ckpt(_initial_labels(adj))
+    labels = checkpoint(_initial_labels(adj))
     # the frame whose checkpoint BLOCKS back the current `labels`
     # (labels itself becomes a projection over it from round 1 on —
-    # free() must target the LogicalRDD holder, not the projection)
+    # the release must target the LogicalRDD holder, not the projection)
     labels_store = labels
 
     for _ in range(max_iter):
@@ -833,13 +825,13 @@ def dedup_clusters(
             F.col("nlabel").alias("label"),
             F.lit(False).alias("_own"),
         )
-        # eager localCheckpoint: materializes THIS round and replaces
+        # eager checkpoint: materializes THIS round and replaces
         # the lineage with the stored blocks — every round starts from
         # a flat LogicalRDD scan (tests/test_dataset.py asserts the
         # returned plan is join-free). The same job counts the changed
         # labels (observe): convergence costs no job of its own.
         changed = Observation()
-        new_full = ckpt(
+        new_full = checkpoint(
             labels.select("node", "label", F.lit(True).alias("_own"))
             .unionAll(msgs)
             .groupBy("node")
@@ -849,7 +841,7 @@ def dedup_clusters(
             )
             .observe(changed, F.count_if(F.col("label") != F.col("_old")).alias("n"))
         )
-        free(labels_store)  # superseded round's blocks — release now
+        _free_local_blocks(labels_store)  # superseded round — release now
         labels_store = new_full
         labels = new_full.select("node", "label")
         if changed.get["n"] == 0:
@@ -1468,7 +1460,6 @@ def incremental_exact_dedup(
     key_col: str = "doc_id",
     *,
     fp_col: str = "fp",
-    broadcast_index: bool = False,
 ) -> DataFrame:
     """Classify a NEW batch of documents against the fingerprint index
     of the corpus already ingested → ``(k, fp, status)`` with status
@@ -1492,11 +1483,9 @@ def incremental_exact_dedup(
     all hash-partition on the SAME key, so Catalyst reuses one exchange
     per side and the batch never shuffles on anything but fp (md5 keys
     are uniform → no skew; the index side ships fingerprints only,
-    ~32 B/row). ``broadcast_index=True`` opts a small index (early
-    corpus life) into a map-side probe. Fingerprint = md5(normalized
-    text) — identical to ``exact_duplicates``, portable by the repo's
-    hash rule, so an external engine (or the DuckDB oracle) can
-    maintain the same index.
+    ~32 B/row). Fingerprint = md5(normalized text) — identical to
+    ``exact_duplicates``, portable by the repo's hash rule, so an
+    external engine (or the DuckDB oracle) can maintain the same index.
 
     Reference: gookit/validate has no dataset memory at all — this is
     the dataset-level lift of its unique-style checks (see
@@ -1510,8 +1499,6 @@ def incremental_exact_dedup(
     idx = index.select(F.col(fp_col).alias("fp")).distinct().withColumn(
         "_seen", F.lit(True)
     )
-    if broadcast_index:
-        idx = F.broadcast(idx)
     canon = b.groupBy("fp").agg(F.min("k").alias("_canon"))
     status = (
         F.when(F.col("_seen").isNotNull(), F.lit("dup_index"))
@@ -1694,7 +1681,6 @@ def incremental_minhash_neardup(
     n_bands: int = 6,
     threshold: float = 0.7,
     max_bucket: int = 1000,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Probe a NEW batch of documents against the stored LSH index of
     the already-ingested corpus → ``(k, index_key, jaccard)``: every
@@ -1712,8 +1698,7 @@ def incremental_minhash_neardup(
     - the index side never shuffles: batch band keys are **broadcast**
       into a map-side join over the stored band table, and hot buckets
       are dropped by the precomputed ``bucket_n`` (map-side filter, no
-      re-aggregation). ``broadcast_batch=False`` falls back to a
-      (band, bsig)-keyed shuffle join for abnormally large batches;
+      re-aggregation);
     - the SETS index is semi-join-reduced before verification: only the
       matched index keys' shingle arrays are fetched (broadcast IN
       probe — refcheck's reduction rule), so verify moves
@@ -1731,11 +1716,11 @@ def incremental_minhash_neardup(
     bstaged = signed_shingle_frame(
         batch, text_col, key_col, k=k, n_hashes=n_hashes
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    bexp = _band_rows(bstaged, n_hashes, n_bands).select(
-        F.col("k").alias("bk"), F.col("n").alias("bn"), "band", "bsig"
+    bexp = F.broadcast(
+        _band_rows(bstaged, n_hashes, n_bands).select(
+            F.col("k").alias("bk"), F.col("n").alias("bn"), "band", "bsig"
+        )
     )
-    if broadcast_batch:
-        bexp = F.broadcast(bexp)
     ib = index_bands.filter(F.col("bucket_n") <= max_bucket).select(
         F.col("k").alias("ik"), F.col("n").alias("in_"), "band", "bsig"
     )

@@ -1,7 +1,7 @@
 """Iterative graph analytics over document link graphs — PageRank as
-the representative fixed-point algorithm (dedup.py's min-label
-propagation is the other; both share the checkpoint-per-round
-discipline).
+the representative fixed-point algorithm (`k_core` and dedup.py's
+min-label propagation are the others; all three truncate lineage every
+round through ``session.checkpoint``).
 
 Reference seed: gookit/validate has no graph surface — this is the
 dataset-level extension (SURVEY.md §2.9) for corpora that carry a
@@ -29,15 +29,18 @@ Each round then costs: the rank join against that src-partitioned
 stream, one dst aggregation shuffle, and a left join back onto the
 node list whose contrib side reuses the aggregation's partitioning
 (nodes with no in-links keep the teleport term — an inner join would
-silently drop them). Lineage is truncated with localCheckpoint every
-round (CLAUDE.md round-3 gotcha: cache() does NOT stop the analyzer
-re-walking a join-per-round nest). For multi-executor runs prefer a
-reliable checkpoint dir (same note as dedup.dedup_clusters).
+silently drop them). Lineage is truncated with ``session.checkpoint``
+every round (CLAUDE.md round-3 gotcha: cache() does NOT stop the
+analyzer re-walking a join-per-round nest): local checkpoints, or
+reliable ones that survive executor loss once ``sc.setCheckpointDir``
+is set — the setting for multi-executor runs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from validate_spark.session import checkpoint
 
 SCALE = 10**12
 
@@ -49,8 +52,6 @@ def pagerank(
     dst_col: str = "dst",
     n_iters: int = 3,
     damping_pct: int = 85,
-    checkpoint: bool = True,
-    reliable: bool = False,
 ) -> DataFrame:
     """Integer-exact PageRank over an edge list. Nodes are the union
     of sources and destinations; parallel edges count once each (a
@@ -61,14 +62,6 @@ def pagerank(
 
     ``damping_pct`` is an integer percentage (85 = the classic 0.85)
     so the contribution arithmetic stays in int64.
-
-    ``reliable=True`` (mirrors ``dedup.dedup_clusters``) truncates each
-    round with ``checkpoint()`` into ``sc.setCheckpointDir``'s storage
-    instead of ``localCheckpoint()``: local checkpoints live in
-    executor block storage, so losing ONE executor mid-loop kills the
-    whole multi-hour job at cluster scale (truncated lineage is
-    unrecoverable by design). The right setting for real cluster runs;
-    the local default keeps tests and single-node runs dependency-free.
     """
     e = edges.select(
         F.col(src_col).cast("long").alias("src"),
@@ -105,11 +98,7 @@ def pagerank(
             base_expr.alias("_base"),
         )
     )
-    ckpt = (lambda d: d.checkpoint()) if reliable else (
-        lambda d: d.localCheckpoint()
-    )
-    if checkpoint:
-        ranks = ckpt(ranks)
+    ranks = checkpoint(ranks)
     for _ in range(n_iters):
         # damped per-edge contribution: rank*85 DIV 100 DIV outdeg —
         # ints end to end; the edge stream shuffles once on dst
@@ -138,14 +127,9 @@ def pagerank(
                 "_base",
             )
         )
-        if checkpoint:
-            ranks = ckpt(ranks)
-    if checkpoint:
-        # every round's localCheckpoint already materialized through
-        # eo; with checkpoint=False the returned plan still references
-        # eo lazily, so unpersisting here would discard the staging
-        # before it was ever used — the caller's action drives it then
-        eo.unpersist()
+        ranks = checkpoint(ranks)
+    # every round's checkpoint already materialized through eo
+    eo.unpersist()
     return ranks.select(
         "node",
         "rank_e12",
@@ -282,7 +266,6 @@ def k_core(
     src_col: str = "src",
     dst_col: str = "dst",
     max_rounds: int = 30,
-    reliable: bool = False,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly delete
     every node whose degree (in the CURRENT remaining graph) is < k
@@ -306,12 +289,11 @@ def k_core(
     Scale shape: each round is one degree aggregate (explode both
     endpoints, hash-agg — map-side combined) plus two left-semi joins
     of the edge list against the ≥k survivor set, lineage truncated
-    per round (``localCheckpoint``; ``reliable=True`` mirrors
-    `pagerank`/`dedup_clusters` — durable ``checkpoint()`` into
-    ``sc.setCheckpointDir`` storage so one lost executor doesn't kill
-    a multi-hour run). Rounds needed = the graph's "peeling depth",
-    typically O(10) for web graphs; each round's cost shrinks with
-    the surviving edge set.
+    per round (``session.checkpoint``, as in `pagerank` and
+    `dedup_clusters`: durable once ``sc.setCheckpointDir`` is set, so
+    one lost executor doesn't kill a multi-hour run). Rounds needed =
+    the graph's "peeling depth", typically O(10) for web graphs; each
+    round's cost shrinks with the surviving edge set.
 
     Output: (node, degree) — survivors only, with their k-core
     degree (all ≥ k by construction); empty frame when the k-core is
@@ -326,10 +308,7 @@ def k_core(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    ckpt = (lambda d: d.checkpoint()) if reliable else (
-        lambda d: d.localCheckpoint()
-    )
-    cur = ckpt(und)
+    cur = checkpoint(und)
     prev = cur.count()
     for _ in range(max_rounds):
         if prev == 0:
@@ -343,7 +322,7 @@ def k_core(
         nxt = cur.join(
             keep.select(F.col("node").alias("u")), "u", "left_semi"
         ).join(keep.select(F.col("node").alias("v")), "v", "left_semi")
-        nxt = ckpt(nxt)
+        nxt = checkpoint(nxt)
         cnt = nxt.count()
         cur = nxt
         if cnt == prev:

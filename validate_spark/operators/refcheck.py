@@ -5,11 +5,15 @@ validators_compare.go:22-28; `isFile`, validators.go:505-517) are
 side-effecting per-record lookups. The table-scale re-expression:
 "every media_ref must exist in the media catalog" = LEFT ANTI JOIN.
 
-Strategy selection mirrors what a 1000-executor cluster needs:
-- catalog small (dimension-sized) → ``broadcast()`` the catalog; the
-  anti-join runs map-side with ZERO shuffle of the 10^12-row fact side;
-- catalog large → shuffle anti-join; AQE converts to broadcast at
-  runtime if the built side turns out small, and handles skew.
+Strategy selection is by operator, not by flag:
+- ``dangling_refs``, ``dangling_span_refs`` and
+  ``attribute_consistency`` always ``broadcast()`` the catalog or
+  dimension (dimension-sized by nature): the join runs map-side with
+  ZERO shuffle of the 10^12-row fact side;
+- ``dangling_ref_counts`` is the large-catalog operator: a shuffle
+  anti-join after a semi-join reduction of the fact side; AQE
+  converts it to broadcast at runtime if the catalog turns out small,
+  and handles skew.
 
 For the interleaved documents table the refs live INSIDE the spans
 array — ``dangling_span_refs`` explodes only (doc_id, media_ref),
@@ -26,14 +30,12 @@ def dangling_refs(
     ref_col: str,
     catalog: DataFrame,
     catalog_key: str = "ref",
-    *,
-    broadcast_catalog: bool = True,
 ) -> DataFrame:
     """Rows of ``fact`` whose ``ref_col`` is non-null but absent from the
     catalog."""
-    cat = catalog.select(F.col(catalog_key).alias("__cat_key")).distinct()
-    if broadcast_catalog:
-        cat = F.broadcast(cat)
+    cat = F.broadcast(
+        catalog.select(F.col(catalog_key).alias("__cat_key")).distinct()
+    )
     refs = fact.filter(F.col(ref_col).isNotNull())
     return refs.join(cat, refs[ref_col] == cat["__cat_key"], "left_anti")
 
@@ -45,7 +47,6 @@ def dangling_span_refs(
     spans_col: str = "spans",
     key_col: str = "doc_id",
     catalog_key: str = "ref",
-    broadcast_catalog: bool = True,
 ) -> DataFrame:
     """(doc_id, media_ref) pairs dangling vs the catalog. Projects to the
     two needed columns BEFORE exploding so column pruning reaches the
@@ -61,9 +62,9 @@ def dangling_span_refs(
             ).alias("media_ref"),
         )
     )
-    cat = catalog.select(F.col(catalog_key).alias("__cat_key")).distinct()
-    if broadcast_catalog:
-        cat = F.broadcast(cat)
+    cat = F.broadcast(
+        catalog.select(F.col(catalog_key).alias("__cat_key")).distinct()
+    )
     return refs.join(cat, refs["media_ref"] == cat["__cat_key"], "left_anti")
 
 
@@ -72,8 +73,6 @@ def dangling_ref_counts(
     ref_col: str,
     catalog: DataFrame,
     catalog_key: str = "ref",
-    *,
-    broadcast_catalog: bool = False,
 ) -> DataFrame:
     """Scale path for the case BOTH sides are huge: (ref, n_occurrences)
     for every dangling ref, via semi-join reduction.
@@ -85,9 +84,8 @@ def dangling_ref_counts(
     anything moves, so the shuffle is O(distinct refs) — then the
     anti-join runs on the reduced frame. Same trick a bloom-filter
     runtime filter approximates, but exact and with zero extra pass.
-
-    Default is a shuffle join (both sides large); pass
-    ``broadcast_catalog=True`` when the catalog is dimension-sized.
+    The anti-join is a shuffle join (both sides large); a dimension-
+    sized catalog belongs to ``dangling_refs``.
     """
     counts = (
         fact.filter(F.col(ref_col).isNotNull())
@@ -95,27 +93,7 @@ def dangling_ref_counts(
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
     )
     cat = catalog.select(F.col(catalog_key).alias("__cat_key")).distinct()
-    if broadcast_catalog:
-        cat = F.broadcast(cat)
     return counts.join(cat, counts[ref_col] == cat["__cat_key"], "left_anti")
-
-
-def ref_integrity_report(
-    docs: DataFrame,
-    catalog: DataFrame,
-    **kwargs,
-) -> DataFrame:
-    """One row: (n_refs, n_dangling) for the spans media_ref column."""
-    spans_col = kwargs.get("spans_col", "spans")
-    n_refs = docs.select(
-        F.sum(
-            F.size(F.filter(F.col(spans_col).getField("media_ref"), lambda r: r.isNotNull()))
-        ).alias("n_refs")
-    )
-    n_dangling = dangling_span_refs(docs, catalog, **kwargs).agg(
-        F.count(F.lit(1)).alias("n_dangling")
-    )
-    return n_refs.crossJoin(n_dangling)
 
 
 def attribute_consistency(
@@ -124,8 +102,6 @@ def attribute_consistency(
     dim: DataFrame,
     dim_key: str,
     attr_pairs: list[tuple[str, str]],
-    *,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Denormalization-consistency check (the step past existence):
     for fact rows whose ``fk_col`` RESOLVES in the dimension, do the
@@ -142,20 +118,18 @@ def attribute_consistency(
     Scale: the dimension is dimension-sized by definition → broadcast
     inner join (the fact side never shuffles), then ONE map-side-
     partial agg over len(attr_pairs) counters; output rows =
-    len(attr_pairs). ``broadcast_dim=False`` falls back to a shuffle
-    join for dimensions past the broadcast threshold (same rule as
-    ``dangling_refs``).
+    len(attr_pairs).
 
     Reference seed: eqField (validators_compare.go — cross-FIELD
     equality inside one record); at table scale the natural lift is
     cross-TABLE equality through a key.
     """
-    d = dim.select(
-        F.col(dim_key).alias("__dk"),
-        *[F.col(dc).alias(f"__d_{i}") for i, (_, dc) in enumerate(attr_pairs)],
+    d = F.broadcast(
+        dim.select(
+            F.col(dim_key).alias("__dk"),
+            *[F.col(dc).alias(f"__d_{i}") for i, (_, dc) in enumerate(attr_pairs)],
+        )
     )
-    if broadcast_dim:
-        d = F.broadcast(d)
     f = fact.filter(F.col(fk_col).isNotNull())
     j = f.join(d, f[fk_col] == d["__dk"], "inner")
     aggs = []

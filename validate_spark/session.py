@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -85,3 +85,22 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` and truncate its lineage: the fixed-point
+    loops (``dedup.dedup_clusters``, ``graph.pagerank``,
+    ``graph.k_core``) call this once per round so the analyzer never
+    re-walks a join-per-round nest (``cache()`` truncates execution,
+    not the plan).
+
+    Reliable ``checkpoint()`` when the context has a checkpoint dir
+    (``sc.setCheckpointDir``): the rounds live in that storage and
+    survive the loss of an executor mid-loop, the setting for cluster
+    runs. Otherwise ``localCheckpoint()``: blocks in executor storage,
+    no dir needed, unrecoverable if an executor dies. The deployment
+    chooses through the setting Spark already has, not a per-call
+    flag."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()
